@@ -943,7 +943,7 @@ object OracleSqlGen {
         FROM hsx)"""
 
   /** [[sigCteOver]] for a `sh` CTE whose shingles are ALREADY BIGINT gram
-    * keys: base hash = key mod P, mirroring Dedup.signaturesOverHashes.
+    * keys: base hash = key mod P, mirroring Dedup.charHashes.
     */
   private def sigCteOverHashes(shCte: String): String =
     s"""$shCte,

@@ -46,14 +46,12 @@ object Dedup {
     ((x - pmod(x, lit(den))) / lit(den)).cast("long")
   }
 
-  /** Word n-gram shingle set of the normalized text. Two projections so the
-    * token array materializes once per row before the per-shingle lambda
-    * (see [[graft.functions.GraftFunctions.shinglesFromTokens]]); the double
-    * reference to `tk` stops CollapseProject from re-inlining it.
+  /** (doc_id, shingles): the word n-gram shingle set of the normalized
+    * text ([[withWordShingles]]).
     */
   def shingled(docs: DataFrame, n: Int = 3): DataFrame =
-    docs.select(col("doc_id"), tokens(normalizeText(col("text"))).as("tk"))
-      .select(col("doc_id"), shinglesFromTokens(col("tk"), n).as("shingles"))
+    withWordShingles(docs.select(col("doc_id"), col("text")), n, "shingles")
+      .select(col("doc_id"), col("shingles"))
 
   // -------------------------------------------------------------------
   // Exact dedup
@@ -170,28 +168,37 @@ object Dedup {
   private val minhashAs = Array.tabulate(NumHashes)(DetHash.minhashA(_))
   private val minhashBs = Array.tabulate(NumHashes)(DetHash.minhashB(_))
 
-  /** (doc_id, shingles, sig) with the base-hash array materialized as a
-    * real column between the md5 pass and the permutation pass. All
-    * NumHashes slots come from ONE fused [[graft.functions.MinHashSlots]]
-    * scan of the hash array (bit-identical to the per-permutation
-    * [[minSlot]] form — spec-asserted) instead of NumHashes
-    * array_min(transform(...)) scans, each of which re-reads the array
-    * and allocates an intermediate copy per row.
+  /** Adds the minhash `sig` over a base-hash array, keeping every column
+    * — the one signature build of the MinHash-LSH family. The hash array
+    * is materialized as a real column between the hashing pass and the
+    * permutation pass, and all NumHashes slots come from ONE fused
+    * [[graft.functions.MinHashSlots]] scan of it (bit-identical to the
+    * per-permutation [[minSlot]] form — spec-asserted) instead of
+    * NumHashes array_min(transform(...)) scans, each of which re-reads
+    * the array and allocates an intermediate copy per row. `hashes` is
+    * [[wordHashes]] or [[charHashes]] of the frame's gram column.
     */
-  private def signaturesOver(sh: DataFrame): DataFrame =
-    sh
-      .withColumn("hs", transform(col("shingles"),
-        s => pmod(DetHash.base60(s), lit(DetHash.P))))
-      .select(col("doc_id"), col("shingles"),
-        graft.functions.MinHashSlots.column(
-          col("hs"), minhashAs, minhashBs, DetHash.P).as("sig"))
+  private def withSignature(frame: DataFrame, hashes: Column): DataFrame =
+    frame
+      .withColumn("__hs", hashes)
+      .withColumn("sig", graft.functions.MinHashSlots.column(
+        col("__hs"), minhashAs, minhashBs, DetHash.P))
+      .drop("__hs")
 
-  private def signatures(docs: DataFrame, n: Int): DataFrame =
-    signaturesOver(shingled(docs, n))
+  /** Base hashes of word-gram strings: md5-derived, reduced mod P. */
+  private def wordHashes(shingles: Column): Column =
+    transform(shingles, s => pmod(DetHash.base60(s), lit(DetHash.P)))
+
+  /** Base hashes of char-gram keys ([[charShingled]]): the key mod P —
+    * no md5 in the loop at all.
+    */
+  private def charHashes(shingles: Column): Column =
+    transform(shingles, h => pmod(h, lit(DetHash.P)))
 
   /** Per-doc signatures (oracle-checkable deliverable on its own). */
   def minhashSignatures(docs: DataFrame, n: Int = 3): DataFrame =
-    signatures(docs, n).select(col("doc_id"), col("sig"))
+    withSignature(shingled(docs, n), wordHashes(col("shingles")))
+      .select(col("doc_id"), col("sig"))
 
   /** Signature as a comma-joined string — array columns don't hash-compare
     * reliably across engines; a canonical string does.
@@ -200,18 +207,14 @@ object Dedup {
     minhashSignatures(docs, n).select(col("doc_id"),
       concat_ws(",", transform(col("sig"), _.cast("string"))).as("sig"))
 
-  /** Band keys: Bands strings "bandIdx:mh_i:mh_j:..." — docs sharing any
-    * band key are LSH candidates.
+  /** Band keys: `bands` strings "bandIdx:mh_i:mh_j:..." over an explicit
+    * (bands, rowsPerBand) split of the NumHashes-slot signature — docs
+    * sharing any band key are LSH candidates. The split is the banding
+    * knob [[charLshPairsAuto]] turns with corpus size; bands × rowsPerBand
+    * must cover the signature exactly so every slot keeps contributing
+    * to one band.
     */
-  private def bandKeys(sig: Column): Column =
-    bandKeysWith(sig, Bands, RowsPerBand)
-
-  /** [[bandKeys]] at an EXPLICIT (bands, rowsPerBand) split of the same
-    * NumHashes-slot signature — the banding knob [[charLshPairsAuto]]
-    * turns with corpus size. bands × rowsPerBand must cover the
-    * signature exactly so every slot keeps contributing to one band.
-    */
-  private def bandKeysWith(sig: Column, bands: Int, rowsPerBand: Int): Column = {
+  private def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column = {
     require(bands * rowsPerBand == NumHashes,
       s"banding $bands x $rowsPerBand must tile the $NumHashes-slot signature")
     array((0 until bands).map { b =>
@@ -220,26 +223,59 @@ object Dedup {
     }: _*)
   }
 
+  /** One row per band key of `sig`, as a generator expression. A doc
+    * with an empty gram set (`nonEmpty` false) gets ONE null key, dropped
+    * by any equi-join: its signature is all P-sentinels, so two empty
+    * docs would otherwise share every band key. The guard lives INSIDE
+    * the generator, NEVER as a Filter node — predicate pushdown
+    * substitutes a filter's column references through every projection
+    * unconditionally, which re-inlines the whole shingling pipeline below
+    * the scan fan-out (measured 13× on the char-LSH query and 4× on the
+    * containment report). explode_outer, not explode, for the
+    * InferFiltersFromGenerate reason [[jaccardPairsOver]] gives.
+    */
+  private def bandRows(sig: Column, nonEmpty: Column, bands: Int = Bands,
+                       rowsPerBand: Int = RowsPerBand): Column =
+    explode_outer(when(nonEmpty, bandKeys(sig, bands, rowsPerBand)))
+
+  /** The LSH band self-join: every pair of `banded` rows (aliased `x`
+    * and `y`) sharing a band key `bk`, with x.doc_id < y.doc_id. Callers
+    * select, verify and de-duplicate the pairs themselves.
+    */
+  private def bandPairs(banded: DataFrame): DataFrame =
+    banded.as("x").join(banded.as("y"), col("x.bk") === col("y.bk"))
+      .filter(col("x.doc_id") < col("y.doc_id"))
+
+  /** Adds the word n-gram shingle set of the normalized `text` as column
+    * `as`, keeping every column. Two projections so the token array
+    * materializes once per row before the per-shingle lambda (see
+    * [[graft.functions.GraftFunctions.shinglesFromTokens]]): the token
+    * array is multi-referenced inside that lambda, so CollapseProject
+    * cannot re-inline the tokenizer per shingle (measured 10×).
+    */
+  private[graft] def withWordShingles(docs: DataFrame, n: Int,
+                                      as: String): DataFrame =
+    docs
+      .withColumn("__tk", tokens(normalizeText(col("text"))))
+      .withColumn(as, shinglesFromTokens(col("__tk"), n))
+      .drop("__tk")
+
+  /** Adds the minhash `sig` of the word-shingle column `shingles` and an
+    * exploded band key `bk`, keeping every column (see [[bandRows]] for
+    * the empty-set guard).
+    */
+  private[graft] def withBandedShingles(frame: DataFrame,
+                                        shingles: String): DataFrame =
+    withSignature(frame, wordHashes(col(shingles)))
+      .withColumn("bk", bandRows(col("sig"), size(col(shingles)) > 0))
+
   /** Adds the minhash `sig` and an exploded band key `bk` while KEEPING
     * every existing column — streaming probes need their event-time
     * column to ride along, and a post-hoc join-back would be a
-    * stream-stream self-join. Empty docs produce one null band key,
-    * dropped by any equi-join. The intermediate columns fan out
-    * multi-referenced at each step, so CollapseProject cannot re-inline
-    * the tokenizer into per-shingle lambdas (the measured-10× trap
-    * [[shingled]] documents).
+    * stream-stream self-join.
     */
   def withBandedSignature(docs: DataFrame, n: Int = 3): DataFrame =
-    docs
-      .withColumn("__tk", tokens(normalizeText(col("text"))))
-      .withColumn("__sh", shinglesFromTokens(col("__tk"), n))
-      .withColumn("__hs", transform(col("__sh"),
-        s => pmod(DetHash.base60(s), lit(DetHash.P))))
-      .withColumn("sig", graft.functions.MinHashSlots.column(
-        col("__hs"), minhashAs, minhashBs, DetHash.P))
-      .withColumn("bk",
-        explode_outer(when(size(col("__sh")) > 0, bandKeys(col("sig")))))
-      .drop("__tk", "__sh", "__hs")
+    withBandedShingles(withWordShingles(docs, n, "__sh"), "__sh").drop("__sh")
 
   /** (doc_id, sig, bk) — one row per band key, the joinable LSH form of a
     * corpus (shared by the persisted band index and the streaming
@@ -284,8 +320,7 @@ object Dedup {
     val idx = lshBandIndex(spark, dir, n).filter(col("doc_id") % 10 < 8)
     val batch = graft.Tables.load(spark, dir, "documents")
       .filter(col("doc_id") % 10 >= 8)
-    withBandedSignature(batch, n)
-      .select(col("doc_id"), col("sig"), col("bk"))
+    bandedSignatures(batch, n)
       .join(idx.select(col("bk"), col("doc_id").as("matched_doc_id"),
         col("sig").as("m_sig")), Seq("bk"))
       .select(col("doc_id"), col("matched_doc_id"),
@@ -380,15 +415,12 @@ object Dedup {
     val bandIdx = lshBandIndex(spark, dir, n).filter(col("doc_id") % 10 < 8)
     val oldSh = shingleIndex(spark, dir, n).filter(col("doc_id") % 10 < 8)
       .select(col("doc_id").as("old_id"), col("shingles").as("os"))
-    // round 17: ONE tokenize+shingle pass over the batch, pinned eagerly.
-    // The batch text pipeline (normalize + tokens + shingles + minhash)
-    // previously re-ran inside each of its three heavy consumers — the
-    // new-new LSH pair relation, the band-key probe, and the verify's
-    // shingle side (≈4 evaluations in the r16 stage profile, the
-    // dominant CPU of every incremental-maintenance query). The batch is
-    // the daily increment (≪ corpus by this op's contract), so pinning
-    // its (doc_id, shingles) rows is bounded executor storage; values
-    // are unchanged (same shingle chain, oracle re-proves).
+    // ONE tokenize+shingle pass over the batch, pinned eagerly: its three
+    // heavy consumers (the new-new LSH pair relation, the band-key probe
+    // and the verify's shingle side) would otherwise each re-run the
+    // batch text pipeline. The batch is the daily increment (≪ corpus by
+    // this op's contract), so pinning its (doc_id, shingles) rows is
+    // bounded executor storage.
     val batchSh = shingled(batch, n).localCheckpoint(true)
     // new-new: the exact LSH pair relation within the batch
     val nn = lshPairsOver(batchSh, threshold).select(col("a"), col("b"))
@@ -397,13 +429,11 @@ object Dedup {
     // by exact jaccard against the persisted shingle index (index side
     // pre-bucketed on doc_id). Wire cost: bands × batch probe rows plus
     // candidate-sized (id, id) and per-candidate gram arrays. The band
-    // keys come from the SAME pinned shingles — the identical
-    // hs → MinHashSlots → bandKeys chain (and empty-shingle guard) as
-    // withBandedSignature, so the probe relation is value-unchanged.
-    val cand = signaturesOver(batchSh)
-      .select(col("doc_id").as("new_id"),
-        explode_outer(when(size(col("shingles")) > 0, bandKeys(col("sig"))))
-          .as("bk"))
+    // keys come from the SAME pinned shingles through the same signature
+    // and band chain as the index, so the probe relation is the one a
+    // full recompute would see.
+    val cand = withBandedShingles(batchSh, "shingles")
+      .select(col("doc_id").as("new_id"), col("bk"))
       .join(bandIdx.select(col("bk"), col("doc_id").as("old_id")), Seq("bk"))
       .select(col("new_id"), col("old_id")).distinct()
     val newSh = batchSh
@@ -784,8 +814,7 @@ object Dedup {
     */
   def fuzzyDecontaminate(docs: DataFrame, n: Int = 3,
                          threshold: Double = 0.8): DataFrame = {
-    val banded = withBandedSignature(docs, n)
-      .select(col("doc_id"), col("sig"), col("bk"))
+    val banded = bandedSignatures(docs, n)
     val evalB = banded.filter(pmod(col("doc_id"), lit(20)) === 0)
       .select(col("bk"), col("doc_id").as("eval_doc_id"), col("sig").as("e_sig"))
     banded.filter(pmod(col("doc_id"), lit(20)) =!= 0)
@@ -889,10 +918,13 @@ object Dedup {
     * the streaming near-dup filter.
     */
   def sigEstimate(sigA: Column, sigB: Column): Column =
-    round(
-      aggregate(
-        zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
-        lit(0), (acc, m) => acc + m).cast("double") / NumHashes, 4)
+    round(slotMatches(sigA, sigB).cast("double") / NumHashes, 4)
+
+  /** Number of minhash slots on which two signatures agree (an int). */
+  private def slotMatches(sigA: Column, sigB: Column): Column =
+    aggregate(
+      zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, m) => acc + m)
 
   /** LSH candidate pairs (a < b), verified with exact jaccard on the
     * shingle sets; emits pairs with jaccard >= threshold.
@@ -938,7 +970,7 @@ object Dedup {
 
   /** [[autoRowsPerBand]] under a RECALL-FLOOR cap: the schedule's width,
     * clamped to `maxRowsPerBand` (itself clamped to a signature-tiling
-    * width in [RowsPerBand, NumHashes]). The r14 recall curve
+    * width in [RowsPerBand, NumHashes]). The recall curve
     * (CharLshWidthRecallSpec: near-threshold recall 63%/22%/7% at
     * rp = 4/8/16) made the doubling schedule's trade a number; this is
     * the lever for pipelines that must HOLD a recall floor past
@@ -1017,32 +1049,16 @@ object Dedup {
     // band self-join yields BOTH signatures directly — no signature
     // re-joins, and the estimate filter runs BEFORE the pair distinct,
     // shrinking that shuffle from every band collision (millions on dense
-    // corpora) to just the passing pairs
-    // docs with EMPTY shingle sets must not band: their signatures are all
-    // P-sentinels, so two empty docs would share every band key and emit a
-    // bogus est_sim=1.0 pair (there is no exact-verify stage here to catch
-    // it — the word-LSH path survives the same collision because its
-    // jaccard verify returns 0.0 for empty sets). The guard lives INSIDE
-    // the generator expression (null array → one null band key → dropped
-    // by the equi-join), NOT as a Filter node: predicate pushdown
-    // substitutes a filter's column references through every projection
-    // unconditionally, which would re-inline the whole shingling pipeline
-    // below the scan fan-out (measured 13× on this query).
-    val bands = signaturesOverHashes(charShingled(docs, n))
+    // corpora) to just the passing pairs. The empty-set guard matters
+    // most here: there is no exact-verify stage to reject the bogus
+    // est_sim=1.0 pair two empty docs would form.
+    val bands = withSignature(charShingled(docs, n), charHashes(col("shingles")))
       .select(col("doc_id"), col("sig"),
-        explode_outer(when(size(col("shingles")) > 0,
-          bandKeysWith(col("sig"), nBands, rowsPerBand)))
+        bandRows(col("sig"), size(col("shingles")) > 0, nBands, rowsPerBand)
           .as("bk"))
-    val matches = aggregate(
-      zip_with(col("sig_a"), col("sig_b"),
-        (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, m) => acc + m)
-    bands.as("x").join(bands.as("y"), col("x.bk") === col("y.bk"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
+    bandPairs(bands)
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-        col("x.sig").as("sig_a"), col("y.sig").as("sig_b"))
-      .select(col("a"), col("b"),
-        round(matches.cast("double") / NumHashes, 4).as("est_sim"))
+        sigEstimate(col("x.sig"), col("y.sig")).as("est_sim"))
       .filter(col("est_sim") >= threshold)
       .distinct()
   }
@@ -1202,10 +1218,14 @@ object Dedup {
     * never the rows the oracle hashes — no exact-count fallback needed.
     */
   def containmentReportAuto(docs: DataFrame, n: Int = 3,
-                            threshold: Double = 0.9): DataFrame = {
-    val slices = if (Similarity.corpusRows(docs)._1 <= RebandAt) 1 else 8
-    containmentReportSliced(docs, n, threshold, slices)
-  }
+                            threshold: Double = 0.9): DataFrame =
+    containmentReportSliced(docs, n, threshold, autoSlices(docs))
+
+  /** Slice count of the value-identical staged builds: one plan up to
+    * [[RebandAt]] rows, 8 sequential slice jobs past it.
+    */
+  private def autoSlices(docs: DataFrame): Int =
+    if (Similarity.corpusRows(docs)._1 <= RebandAt) 1 else 8
 
   /** The AT-SCALE twin of [[containmentReport]]: same bounded output and
     * counting-algebra expansion, but the rep-level pair relation is
@@ -1218,7 +1238,7 @@ object Dedup {
     * caps that term structurally — a candidate needs a full band-key
     * collision, so the posting-expansion verify runs on band survivors
     * only. The recall trade (measured in ContainmentLshRecallSpec):
-    * the symmetric tier is jaccard-shaped, and the round-16 asymmetric
+    * the symmetric tier is jaccard-shaped, and the asymmetric
     * size-stratified tier extends coverage through size ratios ~5-8
     * (94% recall at ratio 2, 56% at 3 on the quote-in-document sweep);
     * past the stratum horizon a contained doc dwarfed by its container
@@ -1343,9 +1363,9 @@ object Dedup {
     *
     *  - the SYMMETRIC 4 × 4 self-join (the jaccard-shaped gate — catches
     *    near-duplicate-shaped containment, ratio ≈ 1);
-    *  - the ASYMMETRIC size-stratified tier (round 16 — the r15 verdict:
-    *    the symmetric gate measured 24% recall at size ratio 2, blind
-    *    past 3, missing the most common quote-in-document regime): each
+    *  - the ASYMMETRIC size-stratified tier (the symmetric gate alone
+    *    measured 24% recall at size ratio 2 and is blind past 3, missing
+    *    the most common quote-in-document regime): each
     *    doc, as a CONTAINER, publishes its [[AsymBands]] × 2 band keys
     *    tagged with its own size stratum; as a CONTAINED candidate it
     *    probes the same keys tagged s+1 .. s+[[MaxStratumDistance]].
@@ -1361,14 +1381,14 @@ object Dedup {
     * candidate; both directions then emit from that single intersection
     * (containment is direction-specific only in its denominator). Docs
     * with empty shingle sets never band (the generator-expression guard
-    * [[charLshPairs]] documents), matching the exact op, which emits
+    * of [[bandRows]]), matching the exact op, which emits
     * nothing for them. Candidacy stays a pure function of the
     * normalized text on both sides (signature + gram count), so the
     * collapse + counting-algebra expansion of [[containmentReportLsh]]
     * carries over unchanged.
     *
     * `maxStratumDistance = 0` disables the asymmetric tier — the
-    * pre-round-16 symmetric-only gate, kept callable so the recall spec
+    * symmetric-only gate, kept callable so the recall spec
     * pins BOTH curves and the lift stays a measured number.
     */
   def containmentPairsLsh(docs: DataFrame, n: Int = 3,
@@ -1382,41 +1402,29 @@ object Dedup {
     * `private[graft]` so the recall spec can measure the asymmetric
     * tier's candidate-volume trade directly (distinct unordered pairs
     * out, before any verify). `maxStratumDistance = 0` is the
-    * pre-round-16 symmetric-only gate.
+    * symmetric-only gate.
     */
   private[graft] def containmentLshCandidates(
       docs: DataFrame, n: Int,
       maxStratumDistance: Int = MaxStratumDistance): DataFrame = {
     // signature + gram-set size computed once; one exchange feeds the
     // symmetric self-join's two sides and the asymmetric tier's probe
-    // and container sides (ReusedExchange). The empty-doc guard lives
-    // INSIDE each generator expression (null key → dropped by the
-    // equi-joins), NEVER as a Filter node: predicate pushdown would
-    // substitute the whole shingling pipeline into the scan's data
-    // filter and re-evaluate it per branch — the measured-13× trap
-    // [[charLshPairsWith]] documents (re-measured here in round 16:
-    // a `.filter(sz > 0)` on this relation put tokenize+shingle+distinct
-    // into BOTH sym-side FileScans and quadrupled the registered
-    // report's sf0.1 time).
-    val sigd = docs
-      .withColumn("__tk", tokens(normalizeText(col("text"))))
-      .withColumn("__sh", shinglesFromTokens(col("__tk"), n))
-      .withColumn("__hs", transform(col("__sh"),
-        s => pmod(DetHash.base60(s), lit(DetHash.P))))
-      .withColumn("sig", graft.functions.MinHashSlots.column(
-        col("__hs"), minhashAs, minhashBs, DetHash.P))
+    // and container sides (ReusedExchange). The empty-doc guard is
+    // [[bandRows]]' generator-expression one: a `.filter(sz > 0)` on
+    // this relation put tokenize+shingle+distinct into BOTH sym-side
+    // FileScans and quadrupled the registered report's sf0.1 time.
+    val sigd = withSignature(withWordShingles(docs, n, "__sh"),
+        wordHashes(col("__sh")))
       .withColumn("sz", size(col("__sh")))
       .select(col("doc_id"), col("sig"), col("sz"))
       .repartition(col("doc_id"))
     val banded = sigd.select(col("doc_id"),
-      explode_outer(when(col("sz") > 0, bandKeys(col("sig")))).as("bk"))
-    val symCand = banded.as("x").join(banded.as("y"), col("x.bk") === col("y.bk"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
+      bandRows(col("sig"), col("sz") > 0).as("bk"))
+    val symCand = bandPairs(banded)
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
     (if (maxStratumDistance <= 0) symCand else {
       val asymBanded = sigd.select(col("doc_id"), col("sig"), col("sz"),
-        explode_outer(when(col("sz") > 0,
-          bandKeysWith(col("sig"), AsymBands, AsymRowsPerBand))).as("abk"),
+        bandRows(col("sig"), col("sz") > 0, AsymBands, AsymRowsPerBand).as("abk"),
         sizeStratum(col("sz")).as("st"))
       // concat (not concat_ws): a null band key — the empty-doc guard —
       // must propagate to a null join key, never degrade to a bare
@@ -1425,9 +1433,9 @@ object Dedup {
       // below runs on the join's output stream BEFORE any pair row is
       // shuffled — the narrow 2-row buckets' noise collisions cost 16
       // slot comparisons each, never a distinct-exchange row or a
-      // posting expansion (round 16: without this gate the 100× fixture
-      // timeboxed the twin — j² per-band admission over cross-stratum
-      // pairs is quadratic-ish in the corpus; with it the survivors are
+      // posting expansion (without this gate the 100× fixture timeboxed
+      // the twin — j² per-band admission over cross-stratum pairs is
+      // quadratic-ish in the corpus; with it the survivors are
       // containment-consistent pairs only).
       val containers = asymBanded.select(col("doc_id").as("cb"),
         col("sig").as("sigb"), col("sz").cast("long").as("szb"),
@@ -1447,12 +1455,11 @@ object Dedup {
       // ratios ≤ 3 (binomial over 16 slots), while background pairs
       // (j ≈ 0.05) are cut ~99% at adjacent strata — the measured curve
       // in ContainmentLshRecallSpec carries the net effect.
-      val m = aggregate(zip_with(col("siga"), col("sigb"),
-        (x, y) => when(x === y, 1L).otherwise(0L)), lit(0L), (a, b) => a + b)
       // strata differ ⇒ ca ≠ cb; normalized unordered so the one verify
       // and the distinct-union with the symmetric tier stay unchanged
       val asymCand = probes.join(containers, Seq("k"))
-        .select(col("ca"), col("cb"), col("sza"), col("szb"), m.as("m"))
+        .select(col("ca"), col("cb"), col("sza"), col("szb"),
+          slotMatches(col("siga"), col("sigb")).as("m"))
         .filter(lit(2L) * col("m") * (col("sza") + col("szb")) >=
           col("sza") * (lit(NumHashes.toLong) + col("m")))
         .select(least(col("ca"), col("cb")).as("a"),
@@ -1469,18 +1476,8 @@ object Dedup {
                                 cand: DataFrame): DataFrame = {
     // one ReusedExchange feeds the three gram consumers (sizes + both
     // posting sides) — the containmentPairs single-evaluation discipline
-    val grams = shingled(docs, n).repartition(col("doc_id"))
-    val sizes = grams.select(col("doc_id"), size(col("shingles")).as("sz"))
-    val pa = grams.select(col("doc_id").as("a"),
-      explode_outer(col("shingles")).as("g"))
-    val pb = grams.select(col("doc_id").as("b"),
-      explode_outer(col("shingles")).as("g"))
-    val inter = cand
-      .join(sizes.select(col("doc_id").as("a"), col("sz").as("sza")), "a")
-      .join(sizes.select(col("doc_id").as("b"), col("sz").as("szb")), "b")
-      .join(pa, "a").join(pb, Seq("b", "g"))
-      .groupBy(col("a"), col("b"), col("sza"), col("szb"))
-      .agg(count(lit(1)).as("inter"))
+    val inter = intersectionCounts(
+      shingled(docs, n).repartition(col("doc_id")), cand)
     // both directions emit from ONE pass over the intersection counts —
     // a generator expression, not a union of two copies of the verify
     val ca = col("inter").cast("double") / col("sza").cast("double")
@@ -1580,7 +1577,7 @@ object Dedup {
                         maxDist: Int = 2,
                         maxRowsPerBand: Int = NumHashes): DataFrame = {
     val texts = docs.select(col("doc_id"), col("text"))
-    // auto band width (round-12): the gate widens its bands as the corpus
+    // auto band width: the gate widens its bands as the corpus
     // grows, holding candidate volume per doc ~flat; resolves to the
     // fixed 4×4 split at oracle scales, so the registered relation is
     // unchanged where the DuckDB oracle runs. `maxRowsPerBand` is the
@@ -1648,49 +1645,45 @@ object Dedup {
       graft.functions.CharGramHashes.column(
         normalizeText(col("text")), n).as("shingles"))
 
-  /** [[signaturesOver]] for ALREADY-HASHED shingles (array<long> gram keys):
-    * the minhash base hash is the key mod P — no md5 in the loop at all.
-    */
-  private def signaturesOverHashes(sh: DataFrame): DataFrame =
-    sh
-      .withColumn("hs", transform(col("shingles"), h => pmod(h, lit(DetHash.P))))
-      .select(col("doc_id"), col("shingles"),
-        graft.functions.MinHashSlots.column(
-          col("hs"), minhashAs, minhashBs, DetHash.P).as("sig"))
-
   private def lshPairsOver(sh: DataFrame, threshold: Double): DataFrame = {
-    // ONE shingle pass (round 17, same discipline as [[jaccardPairsOver]]):
-    // the (doc_id, shingles) frame is repartitioned by doc_id so its four
+    // ONE shingle pass, the [[jaccardPairsOver]] discipline: the
+    // (doc_id, shingles) frame is repartitioned by doc_id so its four
     // consumers — the banded-signature subtree, the per-doc sizes, and
     // both posting sides of the count-based verify — read one
     // ReusedExchange of the shingle arrays instead of re-tokenizing the
-    // corpus per consumer (4 evaluations in the r16 plan). isnotnull
-    // below the exchange keeps the subtrees canonical (non-null key);
-    // the sizes/pa consumers then ride the (doc_id) distribution into
-    // their joins with no further exchange.
+    // corpus per consumer. isnotnull below the exchange keeps the
+    // subtrees canonical (non-null key); the sizes/pa consumers then ride
+    // the (doc_id) distribution into their joins with no further exchange.
     val shP = sh.filter(col("doc_id").isNotNull).repartition(col("doc_id"))
-    // explode_outer for the same InferFiltersFromGenerate reason as in
-    // jaccardPairs — band-key arrays are always exactly Bands elements
-    val bands = signaturesOver(shP)
-      .select(col("doc_id"), explode_outer(bandKeys(col("sig"))).as("bk"))
-    val cand = bands.as("x").join(bands.as("y"), col("x.bk") === col("y.bk"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
+    val bands = withSignature(shP, wordHashes(col("shingles")))
+      .select(col("doc_id"),
+        bandRows(col("sig"), size(col("shingles")) > 0).as("bk"))
+    val cand = bandPairs(bands)
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .distinct()
-    // COUNT-BASED exact verify, same discipline as [[jaccardPairsOver]]:
-    // expand each candidate by a's posting list, match b's postings on
-    // (b, gram), group-count = |A∩B| (shingle sets are distinct by
-    // construction); |A∪B| from the per-doc sizes. Nothing wider than
-    // (doc id, doc id, one gram) shuffles — candidate pairs never pull
-    // full shingle ARRAYS through a join (the array_intersect verify this
-    // replaces shipped two gram arrays per candidate, unbounded row
-    // width on long docs). Zero-overlap or empty-set candidates simply
-    // produce no posting matches — identical output for any threshold>0
-    // (their exact jaccard is 0).
-    val sizes = shP.select(col("doc_id"), size(col("shingles")).as("sz"))
-    val pa = shP.select(col("doc_id").as("a"),
+    intersectionCounts(shP, cand)
+      .withColumn("jac", col("inter").cast("double")
+        / (col("sza") + col("szb") - col("inter")).cast("double"))
+      .filter(col("jac") >= threshold) // unrounded, see jaccardPairsOver
+      .select(col("a"), col("b"), round(col("jac"), 4).as("jaccard_sim"))
+  }
+
+  /** COUNT-BASED exact |A∩B| for each candidate pair (a, b) of `cand`,
+    * with both set sizes: (a, b, sza, szb, inter). `grams` is the
+    * (doc_id, shingles) relation, already repartitioned by doc_id so the
+    * sizes and both posting sides read one exchange. Each candidate is
+    * expanded by a's posting list and matched against b's postings on
+    * (b, gram); the group count is |A∩B| because shingle sets are
+    * distinct by construction. Nothing wider than (doc id, doc id, one
+    * gram) shuffles — candidate pairs never pull whole shingle ARRAYS
+    * through a join (unbounded row width on long docs). Zero-overlap or
+    * empty-set candidates produce no posting matches and so no row.
+    */
+  private def intersectionCounts(grams: DataFrame, cand: DataFrame): DataFrame = {
+    val sizes = grams.select(col("doc_id"), size(col("shingles")).as("sz"))
+    val pa = grams.select(col("doc_id").as("a"),
       explode_outer(col("shingles")).as("g"))
-    val pb = shP.select(col("doc_id").as("b"),
+    val pb = grams.select(col("doc_id").as("b"),
       explode_outer(col("shingles")).as("g"))
     cand
       .join(sizes.select(col("doc_id").as("a"), col("sz").as("sza")), "a")
@@ -1698,10 +1691,6 @@ object Dedup {
       .join(pa, "a").join(pb, Seq("b", "g"))
       .groupBy(col("a"), col("b"), col("sza"), col("szb"))
       .agg(count(lit(1)).as("inter"))
-      .withColumn("jac", col("inter").cast("double")
-        / (col("sza") + col("szb") - col("inter")).cast("double"))
-      .filter(col("jac") >= threshold) // unrounded, see jaccardPairsOver
-      .select(col("a"), col("b"), round(col("jac"), 4).as("jaccard_sim"))
   }
 
   // -------------------------------------------------------------------
@@ -1746,10 +1735,8 @@ object Dedup {
     * per slice — the same trade [[containmentReportSliced]] accepted.
     */
   def charJaccardPairsAuto(docs: DataFrame, n: Int = 5,
-                           threshold: Double = 0.8): DataFrame = {
-    val slices = if (Similarity.corpusRows(docs)._1 <= RebandAt) 1 else 8
-    charJaccardPairsStaged(docs, n, threshold, slices)
-  }
+                           threshold: Double = 0.8): DataFrame =
+    charJaccardPairsStaged(docs, n, threshold, autoSlices(docs))
 
   /** [[charJaccardPairs]] as `slices` sequential staged jobs (see
     * [[charJaccardPairsAuto]] for why the union is value-identical and

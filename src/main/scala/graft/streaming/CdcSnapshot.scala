@@ -86,12 +86,7 @@ object CdcSnapshot {
             p.getFileSystem(conf).delete(p, true)
           }
         }
-        val prior = spark.conf
-          .get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try merged.write.mode("overwrite").partitionBy("bucket").parquet(dir)
-        finally
-          spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+        overwriteBuckets(merged, dir)
       } finally { merged.unpersist(); () }
     } finally { withB.unpersist(); () }
   }
@@ -107,12 +102,26 @@ object CdcSnapshot {
     val cols = snapshot.columns.toSeq
     require(cols.contains("key") && cols.contains("seq"),
       s"upsert inputs need key+seq columns, got $cols")
-    val payload = cols.filterNot(c => c == "key" || c == "seq")
-    snapshot.unionByName(changes.select(cols.map(col): _*))
-      .groupBy(col("key"))
+    latestPerKey(snapshot.unionByName(changes.select(cols.map(col): _*)))
+  }
+
+  /** The highest-seq row per key (payload columns ride along). */
+  private def latestPerKey(rows: DataFrame): DataFrame = {
+    val payload = rows.columns.toSeq.filterNot(c => c == "key" || c == "seq")
+    rows.groupBy(col("key"))
       .agg(max_by(struct(("seq" +: payload).map(col): _*), col("seq")).as("r"))
       .select(col("key") +: ("seq" +: payload).map(f => col(s"r.$f")): _*)
   }
+
+  /** Overwrite ONLY the buckets that have rows in `rows`. Dynamic
+    * partition overwrite is asked for on this write alone: flipping the
+    * session-wide `spark.sql.sources.partitionOverwriteMode` would race
+    * with any other writer in the session, and a static-mode
+    * `partitionBy("bucket")` overwrite deletes every untouched bucket.
+    */
+  private def overwriteBuckets(rows: DataFrame, dir: String): Unit =
+    rows.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket").parquet(dir)
 
   /** Latest-wins whole-row UPSERT — the schema-agnostic sibling of
     * [[applyBatch]] for sinks whose change records carry the full new row
@@ -131,16 +140,11 @@ object CdcSnapshot {
     val cols = batch.columns.toSeq
     require(cols.contains("key") && cols.contains("seq"),
       s"applyUpsert batch needs key+seq columns, got $cols")
-    val payload = cols.filterNot(c => c == "key" || c == "seq")
-    def squash(rows: DataFrame): DataFrame = rows
-      .groupBy(col("key"))
-      .agg(max_by(struct(("seq" +: payload).map(col): _*), col("seq")).as("r"))
-      .select(col("key") +: ("seq" +: payload).map(f => col(s"r.$f")): _*)
     // an empty changeset is a no-op — crucially it must NOT initialize a
     // DATALESS snapshot (a zero-row partitionBy write leaves only
     // _SUCCESS, and the next batch's read of it cannot infer a schema)
     if (batch.isEmpty) return
-    val latest = squash(batch)
+    val latest = latestPerKey(batch)
       .withColumn("bucket", bucketCol(col("key"), buckets))
       .persist()
     try {
@@ -154,14 +158,8 @@ object CdcSnapshot {
       val cur = spark.read.parquet(dir)
         .filter(col("bucket").isin(touched.map(Int.box): _*))
         .drop("bucket")
-      val merged = upsertResult(cur, latest.drop("bucket"))
-        .withColumn("bucket", bucketCol(col("key"), buckets))
-      val prior = spark.conf
-        .get("spark.sql.sources.partitionOverwriteMode", "static")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try merged.write.mode("overwrite").partitionBy("bucket").parquet(dir)
-      finally
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+      overwriteBuckets(upsertResult(cur, latest.drop("bucket"))
+        .withColumn("bucket", bucketCol(col("key"), buckets)), dir)
     } finally { latest.unpersist(); () }
   }
 
@@ -193,23 +191,21 @@ object CdcSnapshot {
     * not listed, read, or written.
     */
   def compact(spark: SparkSession, dir: String, maxFiles: Int = 4): Seq[Int] = {
-    val root = new java.io.File(dir)
-    val fragmented = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-      .filter(_.listFiles().count(_.getName.endsWith(".parquet")) > maxFiles)
-      .map(_.getName.stripPrefix("bucket=").toInt).toSeq
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fragmented =
+      (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("bucket="))
+        .filter(st => fs.listStatus(st.getPath)
+          .count(_.getPath.getName.endsWith(".parquet")) > maxFiles)
+        .map(_.getPath.getName.stripPrefix("bucket=").toInt)
     if (fragmented.nonEmpty) {
       val vals = fragmented.map(Int.box)
       val slice = spark.read.parquet(dir)
         .filter(col("bucket").isin(vals: _*))
         .repartition(fragmented.size, col("bucket"))
         .sortWithinPartitions(col("bucket"), col("key"))
-      val prior = spark.conf
-        .get("spark.sql.sources.partitionOverwriteMode", "static")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try slice.write.mode("overwrite").partitionBy("bucket").parquet(dir)
-      finally
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+      overwriteBuckets(slice, dir)
     }
     fragmented
   }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.CdcSnapshot
@@ -147,5 +149,55 @@ class CdcSnapshotSpec extends SparkSpec {
       assert(s2(50L) == (("N", 50.0)))
       assert(s2.keySet == Set(1L, 3L, 4L, 5L, 6L, 50L))
     } finally q.stop()
+  }
+
+  test("every writer keeps untouched buckets under a static session default, " +
+    "without touching the session conf") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    // a concurrent reader records every value the session conf takes
+    // while the writers run: the overwrite mode must be per-write only
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var polling = true
+    val poller = new Thread(() => while (polling) {
+      seen.add(spark.conf.get(key))
+      Thread.sleep(1)
+    })
+    poller.setDaemon(true)
+    poller.start()
+    try {
+      val keys = 1L to 16L
+      val batchDir = tmp("cdc_static_batch")
+      CdcSnapshot.init(initial(keys), batchDir, buckets = 8)
+      CdcSnapshot.applyBatch(spark, batchDir,
+        Seq((7L, 1L, "U:X")).toDF("key", "seq", "payload"), buckets = 8)
+      val afterBatch = readBack(batchDir)
+      assert(afterBatch.keySet == keys.toSet && afterBatch(7L)._1 == "X")
+
+      val upsertDir = tmp("cdc_static_upsert")
+      CdcSnapshot.applyUpsert(spark, upsertDir,
+        keys.map(k => (k, 1L, s"v$k")).toDF("key", "seq", "v"), buckets = 8)
+      CdcSnapshot.applyUpsert(spark, upsertDir,
+        Seq((7L, 2L, "w7"), (7L, 3L, "z7")).toDF("key", "seq", "v"), buckets = 8)
+      val up = CdcSnapshot.readUpsert(spark, upsertDir).collect()
+        .map(r => r.getAs[Long]("key") -> r.getAs[String]("v")).toMap
+      assert(up == keys.map(k => k -> (if (k == 7L) "z7" else s"v$k")).toMap)
+
+      val before = bucketFiles(batchDir)
+      val compacted = CdcSnapshot.compact(spark, batchDir, maxFiles = 1)
+      val after = bucketFiles(batchDir)
+      assert(after.keySet == before.keySet, s"compact dropped buckets: $after")
+      (before.keySet -- compacted.map(b => s"bucket=$b")).foreach { b =>
+        assert(after(b) == before(b), s"untouched bucket $b was rewritten")
+      }
+      assert(readBack(batchDir) == afterBatch)
+    } finally {
+      polling = false
+      poller.join()
+      prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    assert(seen.asScala.toSet == Set("static"),
+      s"session overwrite mode changed during the writes: $seen")
   }
 }

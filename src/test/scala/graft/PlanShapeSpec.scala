@@ -440,4 +440,26 @@ class PlanShapeSpec extends SparkSpec {
     assert(exchanges <= 1, s"epochSample added exchanges: $exchanges\n$p")
     assert(p.contains("Generate explode"), "replication lost the generator")
   }
+
+  test("the MinHash-LSH family builds each signature and char-gram set once") {
+    // occurrences in the executed (post-AQE, exchange-reused) plan; a
+    // second signature build or gram pass creeping into any of these
+    // chains raises its count
+    val expected = Seq(
+      "dedup_lsh_pairs" -> (2, 0),
+      "dedup_char_lsh" -> (2, 2),
+      "dedup_containment_report_lsh" -> (2, 0),
+      "dedup_char_jaccard_clusters_lsh" -> (0, 0))
+    def occurrences(p: String, word: String): Int =
+      java.util.regex.Pattern.quote(word).r.findAllIn(p).length
+    expected.foreach { case (name, (sigs, grams)) =>
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val p = plan(df).split("== Initial Plan ==")(0)
+      assert(occurrences(p, "minhash_slots") == sigs,
+        s"$name: minhash_slots count changed\n$p")
+      assert(occurrences(p, "char_gram_hashes") == grams,
+        s"$name: char_gram_hashes count changed\n$p")
+    }
+  }
 }

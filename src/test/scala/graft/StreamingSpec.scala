@@ -37,6 +37,25 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("console push query (README S4) prints every arriving row") {
+    val mem = MemoryStream[Cust]
+    val out = new java.io.ByteArrayOutputStream()
+    // the console sink prints from the query's own thread, which inherits
+    // the redirected Console.out it was started under
+    val q = Console.withOut(out) {
+      Pipelines.startConsole(Pipelines.jovens(mem.toDF()).select($"nome"))
+    }
+    try {
+      mem.addData(rows: _*)
+      q.processAllAvailable()
+      assert(q.lastProgress.numInputRows == rows.size)
+    } finally q.stop()
+    val printed = out.toString("UTF-8")
+    assert(printed.contains("Batch: 0"), printed)
+    assert(Seq("ana", "caio").forall(printed.contains), printed)
+    assert(!printed.contains("bia"), printed)
+  }
+
   test("idadecont stream: update-mode windowed counts match batch plan") {
     val mem = MemoryStream[Cust]
     val q = Pipelines.startMemorySink(
