@@ -1,60 +1,53 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main — TWO protocols over the same child machinery.
+import scala.util.control.NonFatal
+
+/** Benchmark main — TWO protocols over the same child machinery. Every
+  * query number is one [[QueryTrace]] run: construction (including the
+  * eager jobs loop operators run) plus a noop-sink write of the whole
+  * output, in seconds.
   *
-  * Round 10 proved (BENCH_DRIFT.md) that a JVM hosting many plan
-  * executions accumulates state whose tax inflates every later
-  * measurement. Round 11 sharded the registry into 4 fresh JVMs; round
-  * 12 first tried 12 — and measured that THE TAX SATURATES DURING THE
-  * SHARD'S OWN COLD PASS: the fixed Spark calibration probe doubles
-  * (0.17 → 0.43 s) after as few as ~13 first executions and never
-  * recovers, because each generated whole-stage-codegen class pollutes
-  * the JIT profiles of the shared Spark runtime paths it calls into
-  * (inline caches at UnsafeRow/writer call sites go megamorphic). No
-  * shard size fixes that — only a JVM whose profile holds a single
-  * query's code measures that query at full speed.
+  * Why children: a JVM hosting many plan executions accumulates state
+  * that taxes every later measurement (BENCH_DRIFT.md). The tax
+  * saturates within a shard's own cold pass: a fixed Spark calibration
+  * probe doubles after ~13 first executions and never recovers, because
+  * each generated whole-stage-codegen class pollutes the JIT profiles of
+  * the shared Spark runtime paths it calls into (inline caches at
+  * UnsafeRow/writer call sites go megamorphic). No shard size fixes
+  * that — only a JVM whose profile holds a single query's code measures
+  * that query at full speed.
   *
   * FULL protocol (`SPARK_GRAFT_BENCH_FULL=1` — the committed-artifact
   * run): one fresh child JVM per query, sequential (cold + convergence-
   * gated warm passes, min wins), then ONE shared drain JVM (cold pass +
-  * pool-6 concurrent drain of the whole registry — the pre-round-11
-  * semantics), then the streaming micro-bench. ~60–75 min for the full
-  * registry; writes BENCH_HEADLINE.json + BENCH_DETAIL.json.
+  * pool-6 concurrent drain of the whole registry), then the streaming
+  * micro-bench. Writes BENCH_HEADLINE.json + BENCH_DETAIL.json.
   *
-  * BUDGETED protocol (the DEFAULT — what the round driver runs): round
-  * 12's full-isolation run exceeded the driver's timebox (BENCH_r12 is
-  * rc=124/parsed-null), so the default now fits a wall-clock budget
-  * (`SPARK_GRAFT_BENCH_BUDGET_S`, default 1200 s — sized under the
-  * timebox round 11's ~25 min run fit) and DEGRADES PASSES BEFORE
-  * COMPLETENESS:
+  * BUDGETED protocol (the DEFAULT): full isolation does not fit a
+  * bounded wall clock, so the default fits `SPARK_GRAFT_BENCH_BUDGET_S`
+  * (default 1200 s) and DEGRADES PASSES BEFORE COMPLETENESS:
   *
-  *   1. ANCHORS (round 15): a fixed 20% sub-budget always runs the
-  *      slowest affordable queries as per-query-isolated children first,
-  *      so the driver artifact carries fresh-JVM numbers comparable to
-  *      BENCH_DETAIL for drift detection even when full isolation can't
-  *      fit (r14's run admitted zero singles — the full-coverage gate
-  *      was strictest at the slowest-first queue's head); then more
-  *      per-query-isolated children (the full protocol's numbers, 3
-  *      passes) while the remaining budget still covers the rest of the
-  *      registry grouped plus the drain child, scanning past
-  *      unaffordable heads to the most expensive query that fits;
+  *   1. ANCHORS: a fixed 20% sub-budget always runs the slowest
+  *      affordable queries as per-query-isolated children first, so the
+  *      artifact carries fresh-JVM numbers comparable to BENCH_DETAIL
+  *      even when full isolation can't fit (the full-coverage gate is
+  *      strictest at the slowest-first queue's head and would otherwise
+  *      admit none); then more per-query-isolated children (3 passes)
+  *      while the remaining budget still covers the rest of the registry
+  *      grouped plus the drain child, scanning past unaffordable heads to
+  *      the most expensive query that fits;
   *   2. then grouped children of ≤13 queries per fresh JVM (under the
   *      measured megamorphic-saturation onset) with budget-chosen warm
   *      passes (3 → 2 → 1);
   *   3. then drain-only: queries never covered by a warm child take
   *      their number from the drain child's SECOND sequential pass
-  *      (shared-JVM warm — round 16: r15 reported 27 queries from the
-  *      drain child's cold pass, so those headline values were 1.5-3×
-  *      their warm minima and round-over-round comparisons on them were
-  *      noise by construction; the pass is RESTRICTED to the
-  *      fallthrough set — by construction the cheap tail — so its cost
-  *      tracks the degradation that produced it and the planner's
-  *      drain reserve stays at the r15 level: charging a full-registry
-  *      warm pass up front displaced two grouped chunks in the first
-  *      dry run), flagged per-query in `warm_srcs` as `drain_warm`;
-  *      `drain_cold` remains only as the last-resort fill for a query
-  *      whose warm pass failed.
+  *      (shared-JVM warm; a cold-pass number is 1.5-3× the warm minimum
+  *      and would make comparisons noise by construction). The pass is
+  *      RESTRICTED to the fallthrough set — by construction the cheap
+  *      tail — so its cost tracks the degradation that produced it and
+  *      the planner's drain reserve stays small. Flagged per query in
+  *      `warm_srcs` as `drain_warm`; `drain_cold` remains only as the
+  *      last-resort fill for a query whose warm pass failed.
   *
   *   The drain child always runs (its drain total is the compact line's
   *   "value") under a hard timeout inside the remaining budget; the
@@ -66,9 +59,8 @@ import org.apache.spark.sql.SparkSession
   *   are never overwritten by a degraded run.
   *
   * Children never run concurrently — timing runs never share the box —
-  * and child stderr goes to the per-child log file, never to the
-  * parent's captured streams (round 12's INHERIT flooded the driver's
-  * 2000-char tail with Spark startup INFO).
+  * and child stdout+stderr go to the per-child log file, never to the
+  * parent's streams (Spark start-up INFO would flood any captured tail).
   *
   * Child mode is selected by SPARK_GRAFT_BENCH_SHARD="i/K" (set only
   * by the orchestrator): the child runs the queries whose sorted index
@@ -77,7 +69,8 @@ import org.apache.spark.sql.SparkSession
   * picks the protocol: "warm" (cold + warm passes, no drain), "drain"
   * (cold + ONE shared-JVM warm pass + drain — the warm pass is what the
   * fallthrough tier reports), "full" (all phases — the default, for
-  * direct local invocations).
+  * direct local invocations). Warm passes also keep each query's best
+  * pass's trace record, written under `queries_trace`.
   */
 object Bench {
 
@@ -92,13 +85,12 @@ object Bench {
   /** Pure anchor selection (spec-pinned): the first queue entry — the
     * queue is slowest-first, so the most expensive — whose isolated
     * child fits the remaining anchor sub-budget AND leaves room for the
-    * always-run drain child. Scanning (rather than testing only the
-    * head) is the r14 advisory: an unaffordable head must not abandon
-    * affordable singles further down.
+    * always-run drain child. It scans rather than testing only the
+    * head: an unaffordable head must not abandon affordable singles
+    * further down.
     *
     * `worstSingle` is the child's hard kill bound (the orchestrator's
-    * per-child timeout) — the r15 advisory: Phase A accumulates ACTUAL
-    * child durations into anchorSpent, so a single whose real runtime
+    * per-child timeout): Phase A accumulates ACTUAL child durations into anchorSpent, so a single whose real runtime
     * far exceeds its estimate could overshoot the sub-budget before the
     * next iteration's check. Bounding each pick by its timeout caps the
     * worst-case anchor spend at 2× the sub-budget and keeps the drain
@@ -140,10 +132,13 @@ object Bench {
     try orchestrateBody(fullMode, budgetS, () => remaining)
     catch { case e: Throwable =>
       // the handoff contract: the last stdout line parses NO MATTER WHAT
+      // — then a fatal error still propagates
       val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
         .replaceAll("[\"\\\\\n\r]", " ").take(300)
+      System.err.println(s"[bench] orchestrator failed: $e")
       println(s"""{"metric":"total","value":-1,"unit":"sec","queries":{},"error":"$msg","protocol":${if (fullMode) "\"full\"" else "\"budgeted\""},"sf":"${sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")}"}""")
-        System.out.flush()
+      System.out.flush()
+      if (!NonFatal(e)) throw e
     }
   }
 
@@ -172,6 +167,9 @@ object Bench {
         case JObject(fs) => fs.map { case (k, v) => k -> v.extract[Double] }.toMap
         case _ => Map.empty
       }
+    // one per-query map from several children, later children winning
+    def merged(ds: Seq[JValue], field: String): Map[String, Double] =
+      ds.map(mapOf(_, field)).foldLeft(Map.empty[String, Double])(_ ++ _)
     def num(j: JValue, field: String): Double =
       (j \ field).extractOpt[Double].getOrElse(0.0)
 
@@ -186,19 +184,21 @@ object Bench {
           mapOf(org.json4s.jackson.JsonMethods.parse(
             new String(java.nio.file.Files.readAllBytes(p), "UTF-8")), "queries")
         else Map.empty[String, Double]
-      } catch { case _: Throwable => Map.empty[String, Double] })
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] BENCH_HEADLINE.json unreadable, estimates default: ${e.getMessage}")
+        Map.empty[String, Double]
+      })
     def est(name: String): Double = math.max(0.1, priorEst.getOrElse(name, 1.0))
     val sumEstAll = names.map(est).sum
     // drain child: startup/warmup + sequential cold pass (~1.8× warm) +
-    // pool-6 drain (~0.5× warm sum, floor 60 s) + quiesce. The round-16
-    // shared-JVM warm pass over the FALLTHROUGH tier is deliberately NOT
-    // charged here: in the planned state every query is covered by a
-    // warm child (the fallthrough set is empty), and when budget
-    // degradation produces one it is the cheap tail by construction
-    // (slowest-first queue) — charging a full-registry warm pass up
-    // front displaced two grouped chunks in the first dry run (52
-    // grouped vs r15's 130) for a pass that mostly re-times already-
-    // covered queries.
+    // pool-6 drain (~0.5× warm sum, floor 60 s) + quiesce. The drain
+    // child's shared-JVM warm pass over the FALLTHROUGH tier is
+    // deliberately NOT charged here: in the planned state every query is
+    // covered by a warm child (the fallthrough set is empty), and when
+    // budget degradation produces one it is the cheap tail by
+    // construction (slowest-first queue) — charging a full-registry warm
+    // pass up front displaces grouped chunks for a pass that mostly
+    // re-times already-covered queries.
     def estDrain: Double = 30 + 1.8 * sumEstAll + math.max(60, 0.5 * sumEstAll) + 25
     var childOverhead = 25.0 // startup + warmup + calib; adapted from observed
 
@@ -215,8 +215,8 @@ object Bench {
       env.foreach { case (k, v) => pb.environment().put(k, v) }
       pb.environment().put("SPARK_GRAFT_BENCH_DETAIL", detailPath)
       // neither child stream may pollute the parent's captured output:
-      // stdout would break the last-line contract, stderr (r12's
-      // INHERIT) flooded the driver's tail capture with Spark INFO
+      // stdout would break the last-line contract, stderr would flood a
+      // captured tail with Spark INFO
       pb.redirectErrorStream(true)
       pb.redirectOutput(new java.io.File(logPath))
       System.err.println(s"[bench] $what starting (timeout ${timeoutS.toInt}s)")
@@ -229,12 +229,12 @@ object Bench {
         else try Some(org.json4s.jackson.JsonMethods.parse(new String(
           java.nio.file.Files.readAllBytes(
             java.nio.file.Paths.get(detailPath)), "UTF-8")))
-        catch { case _: Throwable => None }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $what detail unreadable: ${e.getMessage}"); None }
       // children write their detail PROGRESSIVELY (after every pass,
       // rename-atomic), so a killed or crashed child still contributes
       // every measurement it completed — a budgeted run salvages the
-      // partial file instead of losing the whole child (r16: one drain
-      // timeout cost 68 queries' numbers before this)
+      // partial file instead of losing the whole child
       if (!finished) {
         proc.destroyForcibly(); proc.waitFor()
         degradedNotes :+= s"child '$what' exceeded ${timeoutS.toInt}s and was killed"
@@ -274,7 +274,7 @@ object Bench {
         estGrouped(names, p) + estDrain < budgetS * 0.9).getOrElse(1)
     def estSingle(name: String): Double = childOverhead + (1.8 + 3) * est(name)
     // the single child's hard kill bound — what pickAnchor's worst-case
-    // guard charges a pick (the r15 advisory's overshoot bound)
+    // guard charges a pick (its overshoot bound)
     def worstSingle(name: String): Double = math.max(120, 4 * estSingle(name))
 
     // ---- PHASE A + W: per-query isolated children
@@ -283,9 +283,9 @@ object Bench {
     var singleDetails = Vector.empty[(String, org.json4s.JValue)]
     // SLOWEST FIRST (prior-round warm estimate, name-tiebroken): when the
     // budget degrades, what falls through to the drain child's cold pass
-    // must be the cheap tail — r13's alphabetical order left the 25
-    // slowest queries (the dedup family the 2× bar cares most about) on
-    // drain-cold numbers while 117 sub-second queries got warm children
+    // must be the cheap tail, not the slowest queries (alphabetical order
+    // left the dedup family on drain numbers while sub-second queries got
+    // warm children)
     var queue: Seq[String] = names.sortBy(n => (-est(n), n))
     var singleObs = Vector.empty[Double] // observed single-child durations
     def runSingle(name: String): Double = {
@@ -307,18 +307,18 @@ object Bench {
       dur
     }
 
-    // ---- PHASE A (budgeted only): ANCHORS. The r14 driver run admitted
-    // ZERO isolated children — the slowest-first queue makes Phase W's
-    // full-coverage affordability gate strictest at its very first step
-    // (estSingle(head) is the largest single estimate while estDrain +
-    // estGrouped(rest) already ~fills the 1200 s budget), so the driver
-    // artifact carried no fresh-JVM numbers comparable to BENCH_DETAIL
-    // for drift anchoring. A fixed 20% sub-budget now ALWAYS runs the
-    // slowest affordable queries as isolated children FIRST; the planned
-    // trade is coverage degradation later (fewer grouped passes, a cheap
-    // tail on drain-cold), bounded by the sub-budget. Scan-down on an
-    // unaffordable head (the r14 advisory): the most expensive query
-    // that still fits runs instead of the phase exiting outright.
+    // ---- PHASE A (budgeted only): ANCHORS. The slowest-first queue
+    // makes Phase W's full-coverage affordability gate strictest at its
+    // very first step (estSingle(head) is the largest single estimate
+    // while estDrain + estGrouped(rest) already ~fills the budget), so
+    // without anchors the artifact can carry no fresh-JVM numbers
+    // comparable to BENCH_DETAIL for drift anchoring. A fixed 20%
+    // sub-budget ALWAYS runs the slowest affordable queries as isolated
+    // children FIRST; the planned trade is coverage degradation later
+    // (fewer grouped passes, a cheap tail on drain numbers), bounded by
+    // the sub-budget. Scan-down on an unaffordable head: the most
+    // expensive query that still fits runs instead of the phase exiting
+    // outright.
     val anchorBudget = if (fullMode) 0.0 else budgetS * 0.2
     var anchorSpent = 0.0
     var anchorCount = 0
@@ -336,7 +336,7 @@ object Bench {
     // ---- PHASE W: more isolation while FULL coverage still fits. The
     // gate reserves room for everything left to run grouped plus the
     // drain child; on an unaffordable candidate the scan continues down
-    // the queue (r14 advisory) instead of abandoning affordable singles.
+    // the queue instead of abandoning affordable singles.
     var scanning = true
     while (queue.nonEmpty && (fullMode || scanning)) {
       if (fullMode) runSingle(queue.head)
@@ -390,17 +390,16 @@ object Bench {
       s"$tmp/drain.json", s"$tmp/drain.log", "drain full-registry",
       timeoutS = drainTimeout)
 
-    val allDetails = singleDetails.map(_._2) ++ groupDetails ++ drainDetail
-    val warmSingle = singleDetails.map(s => mapOf(s._2, "queries_warm"))
-      .foldLeft(Map.empty[String, Double])(_ ++ _)
-    val warmGroup = groupDetails.map(mapOf(_, "queries_warm"))
-      .foldLeft(Map.empty[String, Double])(_ ++ _)
-    val drainCold = drainDetail.map(mapOf(_, "queries_cold")).getOrElse(Map.empty)
-    // round 16: the drain child's second sequential pass gives every
-    // fallthrough query WARM shared-JVM semantics — its cold pass only
-    // ever fills a hole left by a query that failed the warm pass
-    val drainWarm = drainDetail.map(mapOf(_, "queries_warm"))
-      .getOrElse(Map.empty).filter(_._2 >= 0)
+    val singles = singleDetails.map(_._2)
+    val drains = drainDetail.toSeq
+    val allDetails = singles ++ groupDetails ++ drains
+    val warmSingle = merged(singles, "queries_warm")
+    val warmGroup = merged(groupDetails, "queries_warm")
+    val drainCold = merged(drains, "queries_cold")
+    // the drain child's second sequential pass gives every fallthrough
+    // query WARM shared-JVM semantics — its cold pass only ever fills a
+    // hole left by a query that failed the warm pass
+    val drainWarm = merged(drains, "queries_warm").filter(_._2 >= 0)
     // merged per-query map, best-protocol-wins; drain tiers only fill holes
     val warm = (drainCold ++ drainWarm ++ warmGroup ++ warmSingle).toSeq.sortBy(_._1)
     val warmSrcs = Map(
@@ -409,15 +408,13 @@ object Bench {
       "drain_warm" -> (drainWarm.keySet -- warmGroup.keySet -- warmSingle.keySet).size,
       "drain_cold" -> (drainCold.keySet -- drainWarm.keySet -- warmGroup.keySet
         -- warmSingle.keySet).size)
-    val cold = (singleDetails.map(s => mapOf(s._2, "queries_cold"))
-      .foldLeft(Map.empty[String, Double])(_ ++ _) ++ Map.empty).toSeq.sortBy(_._1)
-    // round 17: merged noop-sink map for the pure-projection set (child
-    // `queries_noop`) — detail artifacts only, headline untouched
-    val noop = (singleDetails.map(s => mapOf(s._2, "queries_noop")) ++
-      groupDetails.map(mapOf(_, "queries_noop")))
-      .foldLeft(Map.empty[String, Double])(_ ++ _).toSeq.sortBy(_._1)
-    val drain = drainDetail.map(mapOf(_, "queries_drain")).getOrElse(Map.empty)
-      .toSeq.sortBy(_._1)
+    val cold = merged(singles, "queries_cold").toSeq.sortBy(_._1)
+    // each warm-covered query's best-pass trace record, same precedence
+    // as the warm map (drain < group < single)
+    val trace = (drains ++ groupDetails ++ singles).map(_ \ "queries_trace")
+      .collect { case JObject(fs) => fs.toMap }
+      .foldLeft(Map.empty[String, JValue])(_ ++ _).toSeq.sortBy(_._1)
+    val drain = merged(drains, "queries_drain").toSeq.sortBy(_._1)
     val seqTotal = warm.map(_._2).filter(_ >= 0).sum
     val drainTotal = drainDetail.map(num(_, "drain_total")).getOrElse(-1.0)
     if (drainDetail.isEmpty) degradedNotes :+=
@@ -427,21 +424,16 @@ object Bench {
       else allDetails.map(num(_, "calib_jvm_best_s")).min
     val calibSparkBest = if (allDetails.isEmpty) -1.0
       else allDetails.map(num(_, "calib_spark_best_s")).min
-    // max over children (ADVICE r11): the first child's pre-run load
+    // max over children: the first child's pre-run load
     // alone would hide the load later children started under
     val loadStart = if (allDetails.isEmpty) -1.0
       else allDetails.map(num(_, "load_avg_start")).max
 
-    def jsonMap(m: Seq[(String, Double)], f: Double => Double = identity) = m
-      .map { case (k, v) => s"\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
-    val singlesJson = singleDetails.map { case (name, j) =>
-      s""""$name":${org.json4s.jackson.JsonMethods.compact(j)}"""
-    }.mkString(",")
-    val groupsJson = groupDetails.zipWithIndex.map { case (j, i) =>
-      s""""group_$i":${org.json4s.jackson.JsonMethods.compact(j)}"""
-    }.mkString(",")
-    val drainJson = drainDetail
-      .map(org.json4s.jackson.JsonMethods.compact).getOrElse("null")
+    import org.json4s.jackson.JsonMethods.{compact => text}
+    val singlesJson = text(JObject(singleDetails: _*))
+    val groupsJson = text(JObject(groupDetails.zipWithIndex
+      .map { case (j, i) => s"group_$i" -> j }: _*))
+    val drainJson = drainDetail.map(text).getOrElse("null")
     val protocol = if (fullMode) "full" else "budgeted"
     val degraded =
       if (degradedNotes.isEmpty && queue.isEmpty && !fullMode &&
@@ -450,6 +442,7 @@ object Bench {
     val degradedJson =
       if (degraded.isEmpty) "null"
       else "\"" + degraded.mkString("; ").replaceAll("[\"\\\\]", " ") + "\""
+    val traceJson = text(JObject(trace: _*))
     val srcsJson = warmSrcs.map { case (k, v) => s""""$k":$v""" }
       .mkString("{", ",", "}")
     val detail =
@@ -457,10 +450,10 @@ object Bench {
          |"protocol_degraded":$degradedJson,"warm_srcs":$srcsJson,
          |"calib_jvm_best_s":$calibJvmBest,"calib_spark_best_s":$calibSparkBest,
          |"queries_warm":${jsonMap(warm)},
-         |"queries_noop":${jsonMap(noop)},
          |"queries_cold":${jsonMap(cold)},
          |"queries_drain":${jsonMap(drain)},
-         |"singles":{$singlesJson},"groups":{$groupsJson},
+         |"queries_trace":$traceJson,
+         |"singles":$singlesJson,"groups":$groupsJson,
          |"drain_shard":$drainJson}""".stripMargin
     // a budgeted (possibly degraded) run must never overwrite the
     // committed full-isolation artifacts
@@ -468,7 +461,7 @@ object Bench {
       if (fullMode) "BENCH_DETAIL.json" else "BENCH_DRIVER_DETAIL.json"
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(detailFile), detail.getBytes("UTF-8"))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
 
     // streaming micro-bench once, in this process's own session, AFTER
@@ -478,13 +471,7 @@ object Bench {
     // driver's timebox.
     if (fullMode) {
       try {
-        val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-        val spark = SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = QueryTrace.session()
         try {
           // the orchestrator's session is COLD (the children did the query
           // work in their own JVMs), so the first streaming trigger pays
@@ -494,72 +481,45 @@ object Bench {
           // latency like the pre-sharding bench did.
           try graft.streaming.StreamMetrics.microBench(spark,
             outPath = s"$tmp/stream_warmup.json")
-          catch { case _: Throwable => () }
+          catch { case NonFatal(e) =>
+            System.err.println(s"[bench] stream warm-up failed: ${e.getMessage}") }
           graft.streaming.StreamMetrics.microBench(spark)
         } finally {
           spark.sparkContext.setLogLevel("OFF")
           spark.stop()
         }
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[bench] stream micro-bench failed: ${e.getMessage}") }
     }
 
     def ms(v: Double) = math.rint(v * 100) / 100
     val calib = s""""calib_jvm_s":${ms(calibJvmBest)},"calib_spark_s":${ms(calibSparkBest)}"""
     val shared = s""""seq_total":${ms(seqTotal)},"n_queries":${warm.size},"protocol":"$protocol","protocol_degraded":$degradedJson,"warm_srcs":$srcsJson,"load_avg":${ms(loadStart)},$calib,"sf":"$sfDir""""
-    val headline = s"""{"metric":"total","value":${ms(headlineValue)},"unit":"sec","queries":${jsonMap(warm, ms)},"headline":"warm min per query (srcs in warm_srcs: fresh-JVM isolated, grouped <=13/JVM, or the drain child's shared-JVM warm pass; drain-cold only fills warm-pass failures); seq_total = sum of warm minima; value = pool-6 concurrent drain of the full registry in one shared JVM (detail in $detailFile)",$shared}"""
+    val headline = s"""{"metric":"total","value":${ms(headlineValue)},"unit":"sec","queries":${jsonMap(warm, ms)},"headline":"warm min per query of construction + noop-sink execution seconds (srcs in warm_srcs: fresh-JVM isolated, grouped <=13/JVM, or the drain child's shared-JVM warm pass; drain-cold only fills warm-pass failures); seq_total = sum of warm minima; value = pool-6 concurrent drain of the full registry in one shared JVM (detail in $detailFile)",$shared}"""
     val slowest = warm.sortBy(-_._2).take(25).sortBy(_._1)
     val compact = s"""{"metric":"total","value":${ms(headlineValue)},"unit":"sec","queries":${jsonMap(slowest, ms)},"queries_note":"${slowest.size} slowest of ${warm.size}; full map in $detailFile",$shared}"""
     if (fullMode)
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("BENCH_HEADLINE.json"), headline.getBytes("UTF-8"))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] BENCH_HEADLINE.json write failed: ${e.getMessage}") }
     println(headline)
     println(compact)
     System.out.flush()
   }
 
-  // ------------------------------------------------------------ child
+  private def jsonMap(m: Seq[(String, Double)], f: Double => Double = identity) = m
+    .map { case (k, v) => s"\"" + k + "\":" + f(v) }.mkString("{", ",", "}")
 
-  /** True iff `df`'s optimized plan is a pure projection pipeline —
-    * only Project/Filter/Union over leaves. For exactly these plans the
-    * bench's `count()` action lets Catalyst prune the projected
-    * expressions, so the count-based seconds under-measure the real
-    * compute (guide §1.4; measured 3-5× on dedup_minhash_sigs /
-    * text_bpe_token_counts in round 16). Aggregates, joins, generators
-    * and windows — the rest of the registry — are count-exact.
-    */
-  private[graft] def countPrunable(df: org.apache.spark.sql.DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project,
-      RepartitionOperation, Sort, Union}
-    df.queryExecution.optimizedPlan.find {
-      // row-count-preserving nodes count() sees straight through:
-      // column pruning strips projected expressions below them, and
-      // EliminateSorts drops a sort under the count aggregate outright
-      case _: Project | _: Filter | _: Union | _: RepartitionOperation |
-           _: Sort => false
-      case leaf if leaf.children.isEmpty => false
-      case _ => true
-    }.isEmpty
-  }
+  // ------------------------------------------------------------ child
 
   private def runShard(shardIdx: Int, shardCount: Int, phase: String): Unit = {
     val doWarm = phase != "drain"
     val doDrain = phase != "warm"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm up JVM/codegen/scheduler so the first timed query isn't charged
-    // 3-5 s of session startup
-    try {
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      Tables.load(spark, sfDir, "lineitem").count()
-    } catch { case _: Throwable => () }
+    val cpus = QueryTrace.cpus
+    val spark = QueryTrace.session()
+    QueryTrace.warmUp(spark, sfDir)
 
     // optional comma-separated name filter — how the orchestrator hands a
     // grouped child its chunk, and a local-iteration knob
@@ -569,23 +529,16 @@ object Bench {
       .zipWithIndex
       .filter { case (_, i) => i % shardCount == shardIdx }
       .map(_._1)
-    // failed queries report -1, not a healthy-looking fast duration
-    def timed(name: String, fn: SparkEntry.Q): Double = {
-      val q0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); (System.nanoTime() - q0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
-    }
 
     def loadAvg: Double =
       java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = loadAvg
 
-    // CALIBRATION probes (round-9 verdict): two fixed workloads run
-    // before every pass whose ONLY variable is the environment —
-    // calib_jvm (single-thread xorshift: per-core speed) and calib_spark
-    // (fixed 64-partition range-sum: scheduler + JVM-internal drift).
+    // CALIBRATION probes: two fixed workloads run before every pass whose
+    // ONLY variable is the environment — calib_jvm (single-thread
+    // xorshift: per-core speed) and calib_spark (fixed 64-partition
+    // range-sum: scheduler + JVM-internal drift).
     def calibJvm(): Double = {
       val t0 = System.nanoTime()
       var x = 0x9e3779b97f4a7c15L; var acc = 0L; var i = 0
@@ -622,7 +575,7 @@ object Bench {
     // drain. A warm child is a fresh JVM whose predecessors are dead
     // processes: its 1-minute load average is stale information, so it
     // gc()s but never waits on load.
-    val quiesceTarget = math.max(2.0, cpus.toInt / 4.0)
+    val quiesceTarget = math.max(2.0, cpus / 4.0)
     val quiesceMaxMs =
       if (doWarm && !doDrain) 0L
       else sys.env.getOrElse("SPARK_GRAFT_QUIESCE_MS", "20000").toLong
@@ -636,19 +589,23 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
 
-    // pass 1: cold sequential (codegen compile included — reported apart)
+    // pass 1: cold sequential (codegen compile included — reported apart);
+    // a failed query reports -1, not a healthy-looking fast duration
     val coldMeta = meta("cold")
-    val cold = named.map { case (name, fn) => name -> timed(name, fn) }
+    val cold = named.map { case (name, fn) =>
+      name -> QueryTrace.run(spark, name, sfDir, fn).seconds }
 
     // warm sequential passes — headline = per-query MIN; contended passes
     // (pre-pass load over the gate, or calibration >1.5× best) get up to
     // SPARK_GRAFT_BENCH_EXTRAS replacements (budgeted children set 0 so
     // their wall-clock stays plannable)
     val loadGate = sys.env.getOrElse("SPARK_GRAFT_LOAD_GATE",
-      (cpus.toInt / 2).toString).toDouble
+      (cpus / 2).toString).toDouble
     def contended(m: PassMeta, bestCj: Double, bestCs: Double): Boolean =
       m.load > loadGate || m.cj > bestCj * 1.5 || m.cs > bestCs * 1.5
     var passes = Vector.empty[(PassMeta, Seq[(String, Double)], Double)]
+    // the trace record of each query's fastest warm pass so far
+    var bestTrace = Map.empty[String, QueryTrace.Record]
     def runPass(label: String,
                 subset: Option[Set[String]] = None,
                 keepGoing: () => Boolean = () => true): Unit = {
@@ -659,18 +616,22 @@ object Bench {
       // failed-query sentinel) so the pass rows stay index-aligned with
       // `named` and the warm-min fold simply skips them
       val run = named.map { case (name, fn) =>
-        name -> (if (subset.forall(_.contains(name)) && keepGoing())
-          timed(name, fn) else -1.0)
+        name -> (if (subset.forall(_.contains(name)) && keepGoing()) {
+          val r = QueryTrace.run(spark, name, sfDir, fn)
+          if (r.ok && bestTrace.get(name).forall(_.seconds > r.seconds))
+            bestTrace += name -> r
+          r.seconds
+        } else -1.0)
       }
       passes :+= ((m, run, (System.nanoTime() - s0) / 1e9))
     }
     // A fresh single-query JVM is still JIT-compiling ITS OWN hot paths
-    // well past the third execution (first full run: 94/145 children had
-    // warm_3 fastest, 81 strictly declining), so 3 passes under-measures
-    // fast queries. Full-protocol default: 6 passes with early exit once
-    // a pass stops improving the min by >2% — converged children stop at
-    // ~4, slow movers get their tail measured. Budgeted children get
-    // their pass count from the orchestrator's planner (3 → 2 → 1).
+    // well past the third execution (most isolated children measured
+    // their fastest pass last), so 3 passes under-measures fast queries.
+    // Full-protocol default: 6 passes with early exit once a pass stops
+    // improving the min by >2% — converged children stop at ~4, slow
+    // movers get their tail measured. Budgeted children get their pass
+    // count from the orchestrator's planner (3 → 2 → 1).
     val warmPassTarget =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "6").toInt.max(1)
     val maxExtras = sys.env.getOrElse("SPARK_GRAFT_BENCH_EXTRAS", "2").toInt
@@ -680,24 +641,15 @@ object Bench {
       val ts = passes.map(_._2(i)._2).filter(_ >= 0)
       if (ts.isEmpty) Double.MaxValue else ts.min
     }.sum
-    // PROGRESSIVE DETAIL WRITES (round 16): the detail file is rewritten
-    // after the cold pass, after every warm pass, and after the drain —
-    // a child killed at its wall timeout leaves its latest completed
+    // PROGRESSIVE DETAIL WRITES: the detail file is rewritten after the
+    // cold pass, after every warm pass, and after the drain — a child
+    // killed at its wall timeout leaves its latest completed
     // measurements on disk instead of a hole, and the orchestrator
-    // salvages whatever is there (the r16 second dry run lost 68
-    // queries' numbers AND the drain value to one timeout; with
-    // progressive writes the same kill costs only the unfinished pass).
-    def jsonMap(m: Seq[(String, Double)]) = m
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    // salvages whatever is there, so a kill costs only the unfinished
+    // pass.
     def metaJson(m: PassMeta) =
       s""""load_pre":${m.load},"quiesce_wait_s":${m.quiesceS},"calib_jvm_s":${m.cj},"calib_spark_s":${m.cs},"gc_total_ms":${m.gc},"heap_used_mb":${m.heap}"""
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
-    // round 17 (verdict #4): noop-sink seconds for the count-prunable
-    // (pure-projection) queries, measured by warm children AFTER their
-    // count-based passes and reported ALONGSIDE them — the count-based
-    // series stays the 16-round-comparable headline methodology; this
-    // closes its known under-measurement gap without forking the series.
-    var noopTimes = Seq.empty[(String, Double)]
     def writeDetail(drain: Seq[(String, Double)], drainTotal: Double,
                     drainQuiesce: Double): Unit = {
       val warmPasses = passes.map(p => (p._2, p._3))
@@ -716,6 +668,8 @@ object Bench {
           s""""${m.label}":{"total":$total,${metaJson(m)},"queries":${jsonMap(run)}}""" }
         .mkString(",")
       val extraPasses = (passes.size - 3).max(0)
+      val traceJson = org.json4s.jackson.JsonMethods.compact(org.json4s.JObject(
+        bestTrace.toSeq.sortBy(_._1).map { case (k, r) => k -> r.toJson }: _*))
       val detail =
         s"""{"sf":"$sfDir","shard":"$shardIdx/$shardCount","phase":"$phase","drain_total":$drainTotal,"seq_total":$seqTotal,
            |"load_avg_start":$loadStart,"load_avg_end":$loadAvg,"drain_quiesce_s":$drainQuiesce,
@@ -723,7 +677,7 @@ object Bench {
            |"calib_jvm_best_s":${calibBest._1},"calib_spark_best_s":${calibBest._2},
            |"cold_meta":{${metaJson(coldMeta)}},
            |"queries_warm":${jsonMap(seq)},
-           |"queries_noop":${jsonMap(noopTimes)},
+           |"queries_trace":$traceJson,
            |${if (warmRuns.nonEmpty) warmRuns + "," else ""}
            |"queries_cold":${jsonMap(cold)},
            |"queries_drain":${jsonMap(drain)}}""".stripMargin
@@ -764,24 +718,6 @@ object Bench {
         passes.count(p => !contended(p._1, bestCj, bestCs)) < 2
       }) { extras += 1; runPass(s"warm_extra_$extras")
            writeDetail(Seq.empty, 0.0, 0.0) }
-      // noop-sink pass for pure projections (see noopTimes above): one
-      // warm execution per prunable query, fn + noop save so the number
-      // is action-for-action comparable with timed()'s fn + count. The
-      // prunability probe builds the frame once untimed (plan analysis
-      // only for lazy queries; loop-bearing constructions are re-run
-      // inside the timed window exactly as timed() re-runs them).
-      noopTimes = named.flatMap { case (name, fn) =>
-        if (!budgetLeft) None
-        else try {
-          if (!countPrunable(fn(spark, sfDir))) None
-          else {
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            Some(name -> (System.nanoTime() - t0) / 1e9)
-          }
-        } catch { case _: Throwable => None }
-      }
-      if (noopTimes.nonEmpty) writeDetail(Seq.empty, 0.0, 0.0)
     }
 
     // concurrent drain (plans/codegen warm from the cold pass, so this
@@ -793,35 +729,34 @@ object Bench {
       if (!doDrain) (Seq.empty[(String, Double)], 0.0, 0.0)
       else {
         val dq = quiesce()
-        import java.util.concurrent.Executors
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = Executors.newFixedThreadPool(
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
           sys.env.getOrElse("SPARK_GRAFT_BENCH_POOL", "6").toInt)
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
         val t0 = System.nanoTime()
-        val futures = named.map { case (name, fn) => Future(name -> timed(name, fn)) }
-        val d = Await.result(Future.sequence(futures), Duration.Inf)
+        // Java futures: get() rethrows a fatal error a query threw
+        // instead of leaving the wait stranded
+        val futures = named.map { case (name, fn) =>
+          pool.submit(new java.util.concurrent.Callable[(String, Double)] {
+            def call() = name -> QueryTrace.run(spark, name, sfDir, fn).seconds
+          })
+        }
+        val d = try futures.map(_.get()) finally pool.shutdown()
         val total = (System.nanoTime() - t0) / 1e9
-        pool.shutdown()
         (d, total, dq)
       }
     if (doDrain) writeDetail(drain, drainTotal, drainQuiesce)
 
     if (doDrain && !doWarm) {
-      // drain-phase pass 2 (round 16): ONE sequential warm pass so the
-      // budgeted protocol's fallthrough tier reports shared-JVM WARM
-      // numbers instead of cold-pass ones (r15 shipped 27 cold values in
-      // the headline map — 1.5-3× their warm minima, round-over-round
-      // noise by construction). Shared-JVM warm is not fresh-JVM warm
-      // (the megamorphic tax applies), but it strips codegen compilation
-      // and cold-IO, the two biggest cold-pass terms. The orchestrator
-      // narrows the pass to the actual fallthrough set via
-      // SPARK_GRAFT_BENCH_WARM_ONLY ("" = none — planned full coverage;
-      // absent = warm everything, for direct child invocations), and the
-      // pass self-truncates at 90% of the child budget — a truncated
-      // query keeps its drain-cold fill instead of costing the child
-      // its life.
+      // drain-phase pass 2: ONE sequential warm pass so the budgeted
+      // protocol's fallthrough tier reports shared-JVM WARM numbers
+      // instead of cold-pass ones (1.5-3× their warm minima).
+      // Shared-JVM warm is not fresh-JVM warm (the megamorphic tax
+      // applies), but it strips codegen compilation and cold IO, the two
+      // biggest cold-pass terms. The orchestrator narrows the pass to the
+      // actual fallthrough set via SPARK_GRAFT_BENCH_WARM_ONLY ("" = none
+      // — planned full coverage; absent = warm everything, for direct
+      // child invocations), and the pass self-truncates at 90% of the
+      // child budget — a truncated query keeps its drain-cold fill
+      // instead of costing the child its life.
       val warmOnly = sys.env.get("SPARK_GRAFT_BENCH_WARM_ONLY")
         .map(_.split(",").filter(_.nonEmpty).toSet)
       if (warmOnly.forall(_.nonEmpty) && budgetLeft) {
@@ -834,7 +769,7 @@ object Bench {
     try {
       spark.sparkContext.setLogLevel("OFF")
       spark.stop()
-    } catch { case _: Throwable => () }
-    ()
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] session stop failed: ${e.getMessage}") }
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Empirical scale validation (the "survives 100×" claim, measured):
@@ -314,13 +316,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val smallDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val bigDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QueryTrace.session()
 
     val t0 = System.nanoTime()
     synthesize(spark, smallDir, bigDir)
@@ -331,29 +327,22 @@ object ScaleBench {
       (SparkEntry.queries.toSeq ++ Extras.toSeq).sortBy(_._1)
         .filter { case (n, _) => only.forall(_.contains(n)) }
 
-    def timed(name: String, fn: (SparkSession, String) => DataFrame,
-              dir: String): Double = {
-      val q0 = System.nanoTime()
-      try { fn(spark, dir).count(); (System.nanoTime() - q0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[scale] $name @ $dir failed: ${e.getMessage}"); -1.0 }
-    }
-
-    // cold pass (codegen compile) then warm MIN-OF-N per scale — the
-    // shared box shows 2-6x contention spikes between runs (the same
-    // lesson Bench learned in round 7), and a factor computed from one
-    // noisy side reads as a scale regression that doesn't exist
+    // cold pass (codegen compile, discarded) then warm MIN-OF-N per
+    // scale — the shared box shows 2-6x contention spikes between runs,
+    // and a factor computed from one noisy side reads as a scale
+    // regression that doesn't exist. -1 when every warm pass failed.
     val warmPasses =
       sys.env.getOrElse("SPARK_GRAFT_SCALE_WARM", "2").toInt.max(1)
     def warmMin(name: String, fn: (SparkSession, String) => DataFrame,
                 dir: String): Double = {
-      val ts = (1 to warmPasses).map(_ => timed(name, fn, dir)).filter(_ >= 0)
+      QueryTrace.run(spark, name, dir, fn)
+      val ts = (1 to warmPasses)
+        .map(_ => QueryTrace.run(spark, name, dir, fn).seconds).filter(_ >= 0)
       if (ts.isEmpty) -1.0 else ts.min
     }
 
-    // phase 1: EVERY query at the small scale (cold discarded, warm kept)
+    // phase 1: EVERY query at the small scale
     val small = registry.map { case (name, fn) =>
-      timed(name, fn, smallDir)
       name -> warmMin(name, fn, smallDir)
     }.toMap
 
@@ -365,7 +354,6 @@ object ScaleBench {
         small.getOrElse(name, -1.0) > SlowCutoffSec => name
     }.toSet
     val firstPass = registry.filter(r => bigSet(r._1)).map { case (name, fn) =>
-      timed(name, fn, bigDir)
       val big = warmMin(name, fn, bigDir)
       val s = small(name)
       val factor = if (s > 0 && big > 0) big / s else -1.0
@@ -389,9 +377,7 @@ object ScaleBench {
       if (!suspect(name)) (row, false)
       else {
         val fn = fnOf(name)
-        timed(name, fn, smallDir)
         val s2 = Seq(s, warmMin(name, fn, smallDir)).filter(_ > 0)
-        timed(name, fn, bigDir)
         val b2 = Seq(b, warmMin(name, fn, bigDir)).filter(_ > 0)
         val (sMin, bMin) = (s2.minOption.getOrElse(-1.0),
           b2.minOption.getOrElse(-1.0))
@@ -411,9 +397,6 @@ object ScaleBench {
       System.err.println(s"[scale] FAILED AT SCALE: $n crashed or could " +
         "not be measured on the 10x panel (reproduced across the re-probe)"))
 
-    def facts(dir: String): String = replicated.toSeq.sorted.map { t =>
-      s""""$t":${spark.read.parquet(s"$dir/$t.parquet").count()}"""
-    }.mkString("{", ",", "}")
     def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val qjson = rows.map { case ((n, s, b, f), reprobed) =>
       val extra = if (reprobed) ""","reprobed":true""" else ""
@@ -437,7 +420,7 @@ object ScaleBench {
          |"slow_cutoff_s":$SlowCutoffSec,"gate_threshold_x":$GateThreshold,
          |"gate_violations":${violations.sorted.map(n => s""""$n"""").mkString("[", ",", "]")},
          |"failed_at_scale":${failed.sorted.map(n => s""""$n"""").mkString("[", ",", "]")},
-         |"rows_small":${facts(smallDir)},"rows_big":${facts(bigDir)},
+         |"rows_small":${facts(spark, smallDir)},"rows_big":${facts(spark, bigDir)},
          |"notes":$notesJson,
          |"small_only_warm_s":$smallOnly,
          |"queries":$qjson}""".stripMargin
@@ -447,6 +430,12 @@ object ScaleBench {
     println(json)
     spark.stop()
   }
+
+  /** Row counts of the replicated fact tables under `dir`, as a JSON object. */
+  private[graft] def facts(spark: SparkSession, dir: String): String =
+    replicated.toSeq.sorted.map { t =>
+      s""""$t":${spark.read.parquet(s"$dir/$t.parquet").count()}"""
+    }.mkString("{", ",", "}")
 }
 
 /** The 100× probe (SCALE FRONTIER): the 10× panel is exhaustive, but
@@ -489,7 +478,7 @@ object ScaleBench {
   *    candidate pair with no kill-flag check, so a 100×-clique task
   *    spins for hours after its job is cancelled (observed live:
   *    AQE submitted a follow-on stage in the seconds between the cap
-  *    cancel and the count() throw, and its five tasks burned full
+  *    cancel and the action's throw, and its five tasks burned full
   *    cores through every later measurement). No in-process reaper can
   *    kill such a thread; the only clean isolation is process death, so
   *    the drive script runs each panel query in its own JVM via
@@ -720,16 +709,10 @@ object ScaleBench100 {
   def main(args: Array[String]): Unit = {
     val smallDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val bigDir = sys.env.getOrElse("SPARK_GRAFT_SCALE100_DIR", "/tmp/graft_scale_sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SCALE100_OUT", "BENCH_SCALE100.json")
     val sidecar = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_SCALE100_PROGRESS", "/tmp/graft_scale100_progress.tsv"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QueryTrace.session()
 
     val t0 = System.nanoTime()
     ScaleBench.synthesize(spark, smallDir, bigDir, Factor)
@@ -754,14 +737,6 @@ object ScaleBench100 {
         s"[scale100] resuming: ${done.size} rows from $sidecar (${done.keys.mkString(", ")})")
     }
 
-    def timedSmall(name: String): Double = {
-      val q0 = System.nanoTime()
-      try { registry(name)(spark, smallDir).count(); (System.nanoTime() - q0) / 1e9 }
-      catch { case e: Throwable =>
-        System.err.println(s"[scale100] $name @ $smallDir failed: ${e.getMessage}")
-        -1.0 }
-    }
-
     /** One capped big pass: a repeating timer cancels the query's job
       * group once past the cap (repeating because AQE launches follow-on
       * jobs the first cancel can miss). Returns (code, elapsed_s):
@@ -772,33 +747,26 @@ object ScaleBench100 {
       * just the earlier-binding resource, so it is recorded as a capped
       * lower-bound row, not a crash), or -1 on a genuine failure. */
     def timedBig(name: String, capSec: Double): (Double, Double) = {
-      val sc = spark.sparkContext
-      val group = s"scale100-$name"
       @volatile var hitCap = false
       val timer = new java.util.Timer("scale100-cap", true)
       val q0 = System.nanoTime()
       def elapsed = (System.nanoTime() - q0) / 1e9
-      sc.setJobGroup(group, s"scale100 big $name", interruptOnCancel = true)
-      timer.scheduleAtFixedRate(new java.util.TimerTask {
-        def run(): Unit =
-          if (elapsed >= capSec) { hitCap = true; sc.cancelJobGroup(group) }
-      }, 1000L, 2000L)
-      try { registry(name)(spark, bigDir).count(); val e = elapsed; (e, e) }
-      catch { case e: Throwable =>
-        def msgs(t: Throwable, seen: Set[Throwable] = Set.empty): String =
-          if (t == null || seen(t)) ""
-          else s"${t}\n${msgs(t.getCause, seen + t)}"
-        if (hitCap) (-2.0, elapsed)
-        else if (msgs(e).contains("No space left on device")) (-3.0, elapsed)
-        else {
-          System.err.println(s"[scale100] $name @ $bigDir failed: ${e.getMessage}")
-          (-1.0, elapsed)
-        }
-      } finally { timer.cancel(); sc.clearJobGroup() }
+      val r =
+        try QueryTrace.run(spark, name, bigDir, registry(name), group =>
+          timer.scheduleAtFixedRate(new java.util.TimerTask {
+            def run(): Unit = if (elapsed >= capSec) {
+              hitCap = true; spark.sparkContext.cancelJobGroup(group)
+            }
+          }, 1000L, 2000L))
+        finally timer.cancel()
+      if (r.ok) (r.seconds, r.seconds)
+      else if (hitCap) (-2.0, elapsed)
+      else if (r.error.exists(_.contains("No space left on device"))) (-3.0, elapsed)
+      else (-1.0, elapsed)
     }
 
-    lazy val factsSmall = facts(spark, smallDir)
-    lazy val factsBig = facts(spark, bigDir)
+    lazy val factsSmall = ScaleBench.facts(spark, smallDir)
+    lazy val factsBig = ScaleBench.facts(spark, bigDir)
     // per-op daily-batch denominators (the machine-checkable ∝-batch
     // contract), measured once per (op, dir) and cached: writeArtifact
     // runs after every query, and these counts are stable within a run
@@ -806,7 +774,7 @@ object ScaleBench100 {
     def batchOf(name: String, dir: String): Long =
       batchCache.getOrElseUpdate((name, dir),
         try BatchCount(name)(spark, dir)
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[scale100] batch count $name @ $dir failed: ${e.getMessage}")
           -1L })
 
@@ -870,8 +838,9 @@ object ScaleBench100 {
     }
 
     panel.filterNot(done.contains).foreach { name =>
-      timedSmall(name) // cold (codegen) discarded; warms the big pass's plan too
-      val s = timedSmall(name)
+      // cold (codegen) discarded; warms the big pass's plan too
+      QueryTrace.run(spark, name, smallDir, registry(name))
+      val s = QueryTrace.run(spark, name, smallDir, registry(name)).seconds
       val row = if (s < 0) Row100(name, s, -1.0, -1.0, 0.0) else {
         val growth =
           if (!IncrementalBatch(name)) -1.0
@@ -910,9 +879,4 @@ object ScaleBench100 {
     stopper.join(30000)
     sys.exit(0)
   }
-
-  private def facts(spark: SparkSession, dir: String): String =
-    Seq("documents", "embeddings", "events", "orders", "lineitem").map { t =>
-      s""""$t":${spark.read.parquet(s"$dir/$t.parquet").count()}"""
-    }.mkString("{", ",", "}")
 }

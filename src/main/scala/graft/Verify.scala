@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,26 +10,18 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = QueryTrace.session()
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     new java.io.File(outDir).mkdirs()
     // small concurrent pool: single tiny queries underuse the session
-    // (same rationale as Bench) and the dump isn't timing-sensitive
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = Executors.newFixedThreadPool(4)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    // (same rationale as Bench) and the dump isn't timing-sensitive.
+    // Java futures: get() rethrows whatever a task threw, so a fatal
+    // error ends the run instead of leaving the wait stranded.
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     val fs = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-      Future {
+      pool.submit(new Runnable { def run(): Unit = {
         // a failed query must leave NO dump: when the caller reuses an
         // outDir, a stale dump from a previous run would silently pass
         // the oracle and mask the failure (chaos-tested — see
@@ -37,17 +29,16 @@ object Verify {
         val dump = new java.io.File(s"$outDir/$name")
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(dump.getPath)
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           def rm(f: java.io.File): Unit = {
             Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
           }
           rm(dump)
         }
-      }
+      }})
     }
-    Await.result(Future.sequence(fs), Duration.Inf)
-    pool.shutdown()
+    try fs.foreach(_.get()) finally pool.shutdown()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

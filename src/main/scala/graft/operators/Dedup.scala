@@ -454,11 +454,20 @@ object Dedup {
     val (resolved0, _) = componentLabels(
       batch.select(col("doc_id")).union(touched),
       nn.unionByName(noLab), "inc_cc")
+    // resolved stays pinned for the session: the returned frame reads it
     val resolved = resolved0.localCheckpoint(true) // 2 consumers below
+    // Once resolved has materialized nothing reads the batch shingles,
+    // the contracted new-old edges or the CC loop's final labels (the
+    // LogicalRDDs behind resolved0), so their pins go now. The consumers
+    // below read resolved only: its nodes are batch ∪ touched, and a
+    // touched node is an old component label (an old doc id, never a
+    // batch id), so the touched rows are resolved minus the batch.
+    Seq(batchSh, noLab, resolved0)
+      .foreach(org.apache.spark.sql.GraftShim.releaseCheckpoint)
     val newLabels = resolved
       .join(batch.select(col("doc_id")), Seq("doc_id"), "left_semi")
     val labelMap = resolved
-      .join(touched, Seq("doc_id"), "left_semi")
+      .join(batch.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .select(col("doc_id").as("old_lab"), col("cluster_id").as("new_lab"))
     val untouched = oldLabels
       .join(broadcast(labelMap.select(col("old_lab").as("cluster_id"))),
@@ -2367,8 +2376,12 @@ object Dedup {
       val next = save(observed)
       changed = Option(observed.queryExecution.observedMetrics(metric).get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
+      // the superseded round has no reader once `next` has materialized
+      org.apache.spark.sql.GraftShim.releaseCheckpoint(labels)
       labels = next
     }
+    // nor has the edge checkpoint: the returned frame reads `labels` only
+    org.apache.spark.sql.GraftShim.releaseCheckpoint(e0)
     val out = nodes.select(col("doc_id"))
       .join(labels.select(col("doc_id"), col("cluster_id")), Seq("doc_id"), "left")
       .select(col("doc_id"),

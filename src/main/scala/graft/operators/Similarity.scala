@@ -388,28 +388,26 @@ object Similarity {
     * (c_id, dim) shuffle of integer partial sums — map-side combined,
     * K·dims groups, corpus-size-independent exchange width.
     */
-  /** Per-round trainer-state checkpoint (round 17, verdict #6 + the r16
-    * advisory): truncates the Lloyd/PQ round's lineage exactly as the
-    * r16 localCheckpoint did, but (a) honors `checkpointDir` — when set,
+  /** Per-round trainer-state checkpoint: truncates the Lloyd/PQ round's
+    * lineage. `reliable` (the training call set a checkpoint dir once):
     * the K-row round table persists + reliably checkpoints (HDFS/S3)
     * instead of pinning lineage-truncated state to executor storage, the
     * same discipline as [[graft.operators.Dedup]]'s componentLabels.save
     * (the persist makes the eager checkpoint and any same-round reuse
-    * share one execution) — and (b) unpersists the PREVIOUS round's
-    * checkpoint backing once the new round has materialized, so
-    * block-manager entries no longer accumulate linearly with training
-    * rounds. Values are untouched — this is pure lineage/storage
-    * management.
+    * share one execution). Once the new round has materialized, the
+    * PREVIOUS round's checkpoint is released — its blocks unpersisted and
+    * its reliable checkpoint files deleted — so neither block-manager
+    * entries nor checkpoint files accumulate with training rounds. Values
+    * are untouched — this is pure lineage/storage management.
     */
-  private def roundCheckpoint(df: DataFrame, checkpointDir: Option[String],
+  private def roundCheckpoint(df: DataFrame, reliable: Boolean,
                               prev: Option[DataFrame]): DataFrame = {
-    checkpointDir.foreach(df.sparkSession.sparkContext.setCheckpointDir)
     val out =
-      if (checkpointDir.isDefined) {
+      if (reliable) {
         df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try df.checkpoint(true) finally df.unpersist(false)
       } else df.localCheckpoint(true)
-    prev.foreach(org.apache.spark.sql.GraftShim.unpersistCheckpointBacking)
+    prev.foreach(org.apache.spark.sql.GraftShim.releaseCheckpoint)
     out
   }
 
@@ -428,6 +426,7 @@ object Similarity {
     var cents = emb.filter(col("vec_id") < numCentroids)
       .select(col("vec_id").as("c_id"),
         col("embedding").cast("array<double>").as("c_emb"))
+    checkpointDir.foreach(emb.sparkSession.sparkContext.setCheckpointDir)
     var prevRound: Option[DataFrame] = None
     for (_ <- 1 to iters) {
       val assigned = train.select(col("vec_id"), col("embedding"))
@@ -456,7 +455,7 @@ object Similarity {
         cents.as("prev").join(means.as("upd"), Seq("c_id"), "left")
           .select(col("c_id"),
             coalesce(col("upd.c_emb"), col("prev.c_emb")).as("c_emb")),
-        checkpointDir, prevRound)
+        checkpointDir.isDefined, prevRound)
       prevRound = Some(cents)
     }
     centsRow(cents)
@@ -829,6 +828,7 @@ object Similarity {
       .select(col("vec_id"), col("pos").as("m"), col("col").as("s_emb"))
     var books = subs.filter(col("vec_id") < ks)
       .select(col("m"), col("vec_id").as("c_id"), col("s_emb").as("c_emb"))
+    checkpointDir.foreach(emb.sparkSession.sparkContext.setCheckpointDir)
     var prevRound: Option[DataFrame] = None
     for (_ <- 1 to iters) {
       val row = books.agg(sort_array(collect_list(struct(
@@ -853,7 +853,7 @@ object Similarity {
         books.as("prev").join(means.as("upd"), Seq("m", "c_id"), "left")
           .select(col("m"), col("c_id"),
             coalesce(col("upd.c_emb"), col("prev.c_emb")).as("c_emb")),
-        checkpointDir, prevRound)
+        checkpointDir.isDefined, prevRound)
       prevRound = Some(books)
     }
     books.agg(sort_array(collect_list(struct(

@@ -12,22 +12,32 @@ object GraftShim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Unpersist the cached RDD backing a checkpoint-produced frame (the
-    * `LogicalRDD` a `localCheckpoint(true)` returns). Iterative trainers
-    * checkpoint per round; without this the superseded round's blocks
-    * accumulate in the block manager for the session's lifetime
-    * (round-17, ADVICE r16). Safe ONLY once nothing will read the frame
-    * again — a locally-checkpointed RDD has no recompute path. No-op
-    * for frames whose backing RDD holds no storage (e.g. reliable
-    * checkpoints, whose data lives in the checkpoint dir).
+  /** Release a checkpoint-produced frame (the `LogicalRDD` a
+    * `localCheckpoint(true)` or `checkpoint(true)` returns): unpersist its
+    * cached blocks and delete its reliable checkpoint files. Iterative
+    * loops checkpoint per round; without this the superseded rounds'
+    * blocks and files accumulate for the session's lifetime. Safe ONLY
+    * once nothing will read the frame again — a locally-checkpointed RDD
+    * has no recompute path, and a reliable one reads its files.
     */
-  def unpersistCheckpointBacking(df: Dataset[_]): Unit =
+  def releaseCheckpoint(df: Dataset[_]): Unit =
     df.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }.foreach { rdd =>
       if (rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
         rdd.unpersist(blocking = false)
+      rdd.getCheckpointFile.foreach { file =>
+        val path = new org.apache.hadoop.fs.Path(file)
+        path.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(path, true)
+      }
     }
+
+  /** Block until every listener has processed every event posted so far
+    * (the bus is asynchronous; a job's end event is posted before its
+    * action returns, so after this a listener has seen the whole job).
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** Post-hoc SQL function registration on a live session (the config-time
     * path is `spark.sql.extensions=graft.GraftExtensions`).

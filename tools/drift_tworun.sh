@@ -1,19 +1,20 @@
 #!/bin/bash
-# Two-run drift adjudication (BENCH_DRIFT.md round-14 recipe, r15 verdict
-# #2): re-run each named query as a fresh-JVM isolated Bench CHILD —
-# exactly the full protocol's per-query measurement (cold + 6
-# convergence-gated warm passes + contention extras) — TWICE, on a quiet
-# box, writing per-run detail JSONs under /tmp/drift_r16/. Invoking the
-# child directly (SPARK_GRAFT_BENCH_SHARD) never touches the committed
-# BENCH_DETAIL/HEADLINE artifacts the orchestrator's full mode rewrites.
+# Two-run drift adjudication (the BENCH_DRIFT.md recipe): re-run each
+# named query as a fresh-JVM isolated Bench CHILD — exactly the full
+# protocol's per-query measurement (cold + 6 convergence-gated warm
+# passes + contention extras) — TWICE, on a quiet box, writing per-run
+# detail JSONs under /tmp/graft_drift/.
+# Invoking the child directly (SPARK_GRAFT_BENCH_SHARD) never touches
+# the committed BENCH_DETAIL/HEADLINE artifacts the orchestrator's full
+# mode rewrites. SPARK_GRAFT_CPUS defaults to every core (nproc).
 #
 # Usage: tools/drift_tworun.sh q1 q2 ...   (run ALONE on the box)
 set -u
 cd "$(dirname "$0")/.."
-OUT=/tmp/drift_r16
+OUT=/tmp/graft_drift
 mkdir -p "$OUT"
 export SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}"
-export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}"
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 export SPARK_GRAFT_BENCH_SHARD=0/1
 export SPARK_GRAFT_BENCH_PHASE=warm
 export SPARK_GRAFT_BENCH_PASSES=6
